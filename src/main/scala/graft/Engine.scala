@@ -147,11 +147,10 @@ object Engine {
     b.config("spark.sql.shuffle.partitions", cpus)
       // shuffle/spill block codec (guide §2.3: "no universal answer —
       // measure"). Parameterised so the array-heavy shuffles (node2vec
-      // walk state) can be A/B'd without a code change; default stays
-      // Spark's lz4 — the r16 A/B on the walk band measured zstd's
-      // better ratio against its CPU and the local winner is recorded
-      // in OPTIMIZATION_r16.md. At 100 TB on a thinner network, revisit
-      // with the same env knob.
+      // walk state) can be A/B'd without a code change. The default is
+      // lz4, Spark's own default; no codec A/B is recorded (the r16
+      // ledger names this knob but holds no measurement of it). At
+      // 100 TB on a thinner network, measure with the same env knob.
       .config("spark.io.compression.codec",
         sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
       .config("spark.sql.adaptive.enabled", "true")

@@ -436,7 +436,9 @@ case class PqEncodeCodes(child: Expression, booksFlat: Array[Long],
   * Janino's 64 KB method limit near 64 boundaries and drops the whole
   * projection to interpreted mode (the LshSignatures lesson — measured
   * 4-10× on the rank consumers). Supports BIGINT and DOUBLE x via the
-  * matching boundary array (exactness: no cross-type casts). */
+  * matching boundary array (exactness: no cross-type casts). DOUBLE
+  * x is searched as x + 0.0, folding -0.0 into 0.0 as Spark's value
+  * order does; `binarySearch` already places NaN after every number. */
 case class QuantileSliceKey(child: Expression, boundsL: Array[Long],
     boundsD: Array[Double]) extends UnaryExpression with CodegenFallback {
   override def prettyName: String = "quantile_slice_key"
@@ -454,7 +456,7 @@ case class QuantileSliceKey(child: Expression, boundsL: Array[Long],
   override protected def nullSafeEval(a: Any): Any = {
     val i = child.dataType match {
       case LongType => java.util.Arrays.binarySearch(boundsL, a.asInstanceOf[Long])
-      case _ => java.util.Arrays.binarySearch(boundsD, a.asInstanceOf[Double])
+      case _ => java.util.Arrays.binarySearch(boundsD, a.asInstanceOf[Double] + 0.0)
     }
     if (i >= 0) 2L * i + 1L else 2L * (-(i + 1))
   }
@@ -490,7 +492,7 @@ case class HeavySubKey(left: Expression, right: Expression,
   override protected def nullSafeEval(x: Any, id: Any): Any = {
     val h = left.dataType match {
       case LongType => java.util.Arrays.binarySearch(heaviesL, x.asInstanceOf[Long])
-      case _ => java.util.Arrays.binarySearch(heaviesD, x.asInstanceOf[Double])
+      case _ => java.util.Arrays.binarySearch(heaviesD, x.asInstanceOf[Double] + 0.0)
     }
     if (h < 0) 0L
     else {

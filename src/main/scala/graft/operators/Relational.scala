@@ -365,10 +365,16 @@ object Relational {
     // guide's derive-synthetic-keys-deterministically rule) used ONLY
     // to DETECT heavy duplicate values. Boundaries steer nothing else,
     // so the sketch can be coarse and sampled.
-    val bRow = rows.agg(min("x").as("lo"), max("x").as("hi"),
+    // DOUBLE x also gets the FINITE min/max: the linear spans cover
+    // only those, and -Inf, +Inf and NaN get slices of their own
+    val finiteX = when(!isnan(col("x")) &&
+      abs(col("x")) =!= lit(Double.PositiveInfinity), col("x"))
+    val probes = Seq(min("x").as("lo"), max("x").as("hi"),
       count(lit(1)).as("n"),
       expr("approx_percentile(if(pmod(xxhash64(id), 50) = 0, x, null), " +
-        s"array(${fracs.mkString(", ")}), 200)").as("bs")).head()
+        s"array(${fracs.mkString(", ")}), 200)").as("bs")) ++
+      (if (isDouble) Seq(min(finiteX), max(finiteX)) else Nil)
+    val bRow = rows.agg(probes.head, probes.tail: _*).head()
     if (bRow.isNullAt(0)) return None
     val n = bRow.getLong(2)
     // below MinSliceRows a single window task per group is trivially
@@ -381,27 +387,40 @@ object Relational {
     // 99%-duplicate columns collapsed into one window task). Cap at the
     // 16 heaviest: protection targets the dominant values, and the
     // per-row key work stays a couple of binary searches.
-    val mult = raw.groupBy(identity).view.mapValues(_.size).toMap
-    val heavies = raw.distinct.filter(v => mult(v) >= 2)
-      .sortBy(v => -mult(v)).take(16)
-      .sortBy(v => if (isDouble) v.asInstanceOf[Double]
-        else v.asInstanceOf[Long].toDouble)
-    val idBounds: Map[Any, Seq[Long]] =
+    //
+    // Values are identified by an exact Long key, never by boxed ==
+    // (under which NaN != NaN) nor via .toDouble (which merges 2^53 and
+    // 2^53+1): a BIGINT is its own key; a DOUBLE keys on its bits after
+    // + 0.0 folds -0.0 into 0.0 — Spark's value semantics, where NaN =
+    // NaN and -0.0 = 0.0. Keys sort in Spark's order (NaN last).
+    val key: Any => Long =
+      if (isDouble) v => java.lang.Double.doubleToLongBits(v.asInstanceOf[Double] + 0.0)
+      else v => v.asInstanceOf[Long]
+    val keyOrder: Ordering[Long] =
+      if (isDouble) Ordering.by[Long, Double](java.lang.Double.longBitsToDouble)(
+        Ordering.Double.TotalOrdering)
+      else Ordering.Long
+    val mult = raw.groupBy(key).view.mapValues(_.size).toMap
+    val heavies = raw.map(key).distinct.filter(k => mult(k) >= 2)
+      .sortBy(k => -mult(k)).take(16).sorted(keyOrder)
+    val idBounds: Map[Long, Seq[Long]] =
       if (heavies.isEmpty) Map.empty
       else {
         val tmax = heavies.map(mult).max
         val sf = (1 to tmax).map(i => i.toDouble / (tmax + 1))
-        rows.where(col("x").isin(heavies: _*))
+        val hv: Seq[Any] = heavies.map(k =>
+          if (isDouble) java.lang.Double.longBitsToDouble(k) else k)
+        rows.where(col("x").isin(hv: _*))
           .groupBy("x")
           .agg(expr(
             s"approx_percentile(id, array(${sf.mkString(", ")}), 200)").as("ib"))
           // distinct per heavy: binary search needs duplicate-free
           // sorted bounds (duplicates only merge adjacent buckets)
-          .collect().map(r => r.get(0) -> r.getSeq[Long](1).distinct).toMap
+          .collect().map(r => key(r.get(0)) -> r.getSeq[Long](1).distinct).toMap
       }
     // slc: r15's exact linear value-range slice (cheap codegen'd
-    // arithmetic — the common no-skew path is byte-identical to the
-    // pre-r16 plan). hg/sub: COMPILED binary searches over the heavy
+    // arithmetic — for BIGINT the common no-skew path is byte-identical
+    // to the pre-r16 plan; DOUBLE adds the non-finite cases). hg/sub: COMPILED binary searches over the heavy
     // set ([[graft.functions.QuantileSliceKey]]/[[HeavySubKey]] — a
     // when-chain form overflowed Janino's 64 KB method limit and
     // dropped the projection to interpreted mode, measured 4-10x).
@@ -412,9 +431,13 @@ object Relational {
     val slc =
       if (n < MinSliceRows) lit(0L)
       else if (isDouble) {
-        val (lo, hi) = (bRow.getDouble(0), bRow.getDouble(1))
+        val (lo, hi) =
+          if (bRow.isNullAt(4)) (0.0, 0.0) else (bRow.getDouble(4), bRow.getDouble(5))
         val span = math.max(java.lang.Double.MIN_NORMAL, (hi - lo) / slices)
-        floor((col("x") - lit(lo)) / lit(span)).cast("long")
+        when(isnan(col("x")), lit(slices + 2L))
+          .when(col("x") === lit(Double.PositiveInfinity), lit(slices + 1L))
+          .when(col("x") === lit(Double.NegativeInfinity), lit(-1L))
+          .otherwise(floor((col("x") - lit(lo)) / lit(span)).cast("long"))
       } else {
         val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
         val span = math.max(1L, (hi - lo) / slices + 1)
@@ -423,16 +446,16 @@ object Relational {
     val (hg, sub) =
       if (heavies.isEmpty) (lit(0L), lit(0L))
       else {
-        val flat = heavies.map(v => idBounds.getOrElse(v, Nil))
+        val flat = heavies.map(k => idBounds.getOrElse(k, Nil))
         val offs = flat.map(_.length).scanLeft(0)(_ + _).toArray
         val bounds = flat.flatten.toArray
         if (isDouble) {
-          val hs = heavies.map(_.asInstanceOf[Double]).toArray
+          val hs = heavies.map(java.lang.Double.longBitsToDouble).toArray
           (graft.functions.VectorExprs.sliceKeyDouble(col("x"), hs),
             graft.functions.VectorExprs.heavySubDouble(col("x"), col("id"),
               hs, bounds, offs))
         } else {
-          val hs = heavies.map(_.asInstanceOf[Long]).toArray
+          val hs = heavies.toArray
           (graft.functions.VectorExprs.sliceKeyLong(col("x"), hs),
             graft.functions.VectorExprs.heavySubLong(col("x"), col("id"),
               hs, bounds, offs))

@@ -52,4 +52,49 @@ class SkewSpec extends SparkSuiteBase {
       assert(math.abs(s - direct(k)._1) < 1e-6)
     }
   }
+
+  /** Ranks from the skew-sliced path joined to plain window ranks, plus
+    * the number of distinct window keys the `heavy` rows got. */
+  private def slicedVsPlain(df: org.apache.spark.sql.DataFrame,
+      heavy: org.apache.spark.sql.Column): (Long, Long, Long) = {
+    import org.apache.spark.sql.expressions.Window
+    val heavyKeys = graft.operators.Relational.skewSliced(df, 16).get
+      .where(heavy).select("slc", "hg", "sub").distinct().count()
+    val ranked = graft.operators.Relational.groupedRanksDouble(df, 16)
+      .select(col("grp"), col("id"), col("rk"))
+    val want = df.withColumn("rk_ref", row_number()
+      .over(Window.partitionBy("grp").orderBy("x", "id")).cast("long"))
+    val joined = ranked.join(want, Seq("grp", "id"))
+    (joined.count(), joined.where(col("rk") =!= col("rk_ref")).count(),
+      heavyKeys)
+  }
+
+  test("skew slices: adjacent BIGINT heavies at 2^53 and 2^53+1 rank exactly") {
+    // 2^53 and 2^53+1 are one and the same DOUBLE. approx_percentile
+    // carries BIGINT as DOUBLE, so the sketch reports both as 2^53:
+    // only that value is sub-split by id, and 2^53+1 must still rank
+    // exactly right after it
+    val p53 = 1L << 53
+    val df = spark.range(10000L).select(lit("g").as("grp"), col("id"),
+      when(pmod(col("id"), lit(5L)) < 3L, lit(p53 + 1))
+        .when(pmod(col("id"), lit(5L)) === 3L, lit(p53))
+        .otherwise(col("id")).as("x"))
+    val (n, bad, keys) = slicedVsPlain(df, col("x") === lit(p53))
+    assert(n === 10000L)
+    assert(bad === 0L, "sliced ranks must equal plain window ranks")
+    assert(keys > 1, s"heavy 2^53 must sub-split by id, got $keys keys")
+  }
+
+  test("skew slices: NaN as a heavy DOUBLE value ranks last, exactly") {
+    // Spark orders NaN above every number and treats NaN = NaN; a
+    // heavy NaN must get its own split window keys at the END of the
+    // order, and the ranks must equal the plain window's
+    val df = spark.range(10000L).select(lit("g").as("grp"), col("id"),
+      when(pmod(col("id"), lit(5L)) < 3L, lit(Double.NaN))
+        .otherwise(col("id").cast("double") * 0.5).as("x"))
+    val (n, bad, keys) = slicedVsPlain(df, isnan(col("x")))
+    assert(n === 10000L)
+    assert(bad === 0L, "sliced ranks must equal plain window ranks")
+    assert(keys > 1, s"heavy NaN must sub-split by id, got $keys keys")
+  }
 }

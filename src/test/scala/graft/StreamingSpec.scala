@@ -659,4 +659,104 @@ class StreamingSpec extends SparkSuiteBase {
     assert(streamed === batch)
     assert(streamed.nonEmpty)
   }
+
+  /** Run `body` and count the micro-batches of every streaming query it
+    * started, from a StreamingQueryListener: distinct (run, batch id)
+    * pairs whose progress has an addBatch phase (data and no-data
+    * batches both do; idle progress events do not). Waits for each
+    * query's terminated event: the listener bus delivers a query's
+    * events in order, so no progress event is missed. */
+  private def withBatchCount[T](body: => T): (T, Int) = {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val started, done = scala.collection.mutable.Set[java.util.UUID]()
+    val batches = scala.collection.mutable.Set[(java.util.UUID, Long)]()
+    val l = new StreamingQueryListener {
+      def onQueryStarted(e: QueryStartedEvent): Unit =
+        synchronized { started += e.runId }
+      def onQueryProgress(e: QueryProgressEvent): Unit = synchronized {
+        if (e.progress.durationMs.containsKey("addBatch"))
+          batches += ((e.progress.runId, e.progress.batchId))
+      }
+      def onQueryTerminated(e: QueryTerminatedEvent): Unit =
+        synchronized { done += e.runId }
+    }
+    spark.streams.addListener(l)
+    try {
+      val out = body
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (l.synchronized(started.isEmpty || !started.subsetOf(done)) &&
+          System.nanoTime() < deadline) Thread.sleep(20)
+      assert(l.synchronized(started.nonEmpty && started.subsetOf(done)),
+        "streaming query events did not arrive")
+      (out, l.synchronized(batches.size))
+    } finally spark.streams.removeListener(l)
+  }
+
+  private def rowStrings(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+
+  test("folded sentinel: tumbling/sliding/session/dedup ≡ batch oracles, in the audited micro-batch counts") {
+    import org.apache.spark.sql.expressions.Window
+    import graft.streaming.Streams
+    val ev = graft.sources.Tables(spark, sf, "events")
+    val fmt = "yyyy-MM-dd HH:mm:ss"
+    val minute = date_trunc("minute", col("ts"))
+    // the batch forms of the DuckDB oracles
+    val tumbling = ev.groupBy(date_format(minute, fmt).as("wstart"),
+        col("event_type"))
+      .agg(count(lit(1)).as("cnt"), round(sum("value"), 2).as("sval"))
+    val sliding = ev.withColumn("i", explode(array(lit(0L), lit(1L))))
+      .groupBy(date_format(timestamp_seconds(
+          unix_seconds(minute) - col("i") * 60L), fmt).as("wstart"),
+        col("event_type"))
+      .agg(count(lit(1)).as("cnt"))
+    val gapUs = 5L * 60 * 1000000
+    val byUser = Window.partitionBy("user_id").orderBy("us")
+    val session = ev.select(col("user_id"), unix_micros(col("ts")).as("us"))
+      .withColumn("prev", lag("us", 1).over(byUser))
+      // strict > : an event at EXACTLY prev + gap merges
+      .withColumn("brk", when(col("prev").isNull ||
+        col("us") - col("prev") > gapUs, 1L).otherwise(0L))
+      .withColumn("sid", sum("brk").over(byUser.rowsBetween(
+        Window.unboundedPreceding, Window.currentRow)))
+      .groupBy("user_id", "sid")
+      .agg(min("us").as("lo"), max("us").as("hi"), count(lit(1)).as("cnt"))
+      .select(col("user_id"),
+        date_format(timestamp_micros(col("lo")), fmt).as("s_start"),
+        date_format(timestamp_micros(col("hi") + gapUs), fmt).as("s_end"),
+        col("cnt"))
+    val dedup = ev.select("event_id")
+    // 2 data batches (the sentinel rides in the last) + 1 flush batch;
+    // dedup's duplicates file is one more data batch; topevent's chain
+    // needs a second advance, i.e. one sentinel file more
+    val cases = Seq(
+      ("tumbling", () => Streams.tumbling(spark, sf), tumbling, 3),
+      ("sliding", () => Streams.sliding(spark, sf), sliding, 3),
+      ("session", () => Streams.session(spark, sf), session, 3),
+      ("dedup", () => Streams.dedup(spark, sf), dedup, 4))
+    for ((name, stream, batch, wantBatches) <- cases) {
+      val (got, n) = withBatchCount(rowStrings(stream()))
+      val want = rowStrings(batch)
+      assert(want.nonEmpty, s"$name: fixture must produce rows")
+      assert(got === want, s"$name: streamed result must equal the batch oracle")
+      assert(n === wantBatches, s"$name: micro-batches")
+    }
+    val (_, nTop) = withBatchCount(Streams.topEvent(spark, sf).collect())
+    assert(nTop === 4, "topevent: micro-batches")
+  }
+
+  test("empty events table: tumbling and dedup return an empty result WITH schema") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-emptyevents-")
+      .toFile.getAbsolutePath
+    Seq.empty[Ev].toDS().write.parquet(s"$dir/events.parquet")
+    val tumbling = graft.streaming.Streams.tumbling(spark, dir)
+    assert(tumbling.columns.toSeq === Seq("wstart", "event_type", "cnt", "sval"))
+    assert(tumbling.count() === 0)
+    val dedup = graft.streaming.Streams.dedup(spark, dir)
+    assert(dedup.columns.toSeq === Seq("event_id"))
+    assert(dedup.count() === 0)
+    graft.Fs.rmRf(new java.io.File(dir))
+  }
 }

@@ -2,6 +2,8 @@
 """Local mirror of the driver's t2 correctness gate: run DuckDB oracle SQL
 against the same parquet tables and compare with Verify's parquet dumps.
 Usage: python3 tools/check.py <sfDir> <outDir> [query ...]
+Exits 1 when any checked query fails, when a named query has no oracle
+entry or no output, or when nothing was checked; 0 only if all passed.
 """
 import json, sys, glob, os
 import duckdb
@@ -25,6 +27,8 @@ def main():
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    for name in sorted(only - oracle.keys()):
+        print(f"FAIL {name}: no oracle entry"); n_fail += 1
     for name, sql in sorted(oracle.items()):
         if only and name not in only:
             continue
@@ -78,7 +82,7 @@ def main():
             print(f"PASS {name} ({len(g)} rows)")
             n_pass += 1
     print(f"== {n_pass} pass, {n_fail} fail")
-    sys.exit(1 if n_fail else 0)
+    sys.exit(1 if n_fail or not n_pass else 0)
 
 if __name__ == "__main__":
     main()
