@@ -338,8 +338,10 @@ object Relational {
     * linearly, so a heavily-duplicated value — the hi == lo degenerate
     * included — collapsed into ONE window task: exactly the unbounded
     * per-group funnel this design exists to avoid (§2.5). The linear
-    * spans STAY (the no-skew path is plan-identical to r15 and costs
-    * one arithmetic op per row); what r16 adds is HEAVY-VALUE
+    * spans STAY (for BIGINT x the no-skew path is plan-identical to r15
+    * and costs one arithmetic op per row; DOUBLE x uses an
+    * overflow-free span, and a column holding ±Inf or NaN pays a second
+    * probe and per-row cases); what r16 adds is HEAVY-VALUE
     * protection: a sampled quantile sketch riding the same probe
     * aggregate detects values owning ≳ 2/slices of the mass, each such
     * value gets its own window key (hg) and is sub-split by id ranges
@@ -365,16 +367,10 @@ object Relational {
     // guide's derive-synthetic-keys-deterministically rule) used ONLY
     // to DETECT heavy duplicate values. Boundaries steer nothing else,
     // so the sketch can be coarse and sampled.
-    // DOUBLE x also gets the FINITE min/max: the linear spans cover
-    // only those, and -Inf, +Inf and NaN get slices of their own
-    val finiteX = when(!isnan(col("x")) &&
-      abs(col("x")) =!= lit(Double.PositiveInfinity), col("x"))
-    val probes = Seq(min("x").as("lo"), max("x").as("hi"),
+    val bRow = rows.agg(min("x").as("lo"), max("x").as("hi"),
       count(lit(1)).as("n"),
       expr("approx_percentile(if(pmod(xxhash64(id), 50) = 0, x, null), " +
-        s"array(${fracs.mkString(", ")}), 200)").as("bs")) ++
-      (if (isDouble) Seq(min(finiteX), max(finiteX)) else Nil)
-    val bRow = rows.agg(probes.head, probes.tail: _*).head()
+        s"array(${fracs.mkString(", ")}), 200)").as("bs")).head()
     if (bRow.isNullAt(0)) return None
     val n = bRow.getLong(2)
     // below MinSliceRows a single window task per group is trivially
@@ -420,8 +416,10 @@ object Relational {
       }
     // slc: r15's exact linear value-range slice (cheap codegen'd
     // arithmetic — for BIGINT the common no-skew path is byte-identical
-    // to the pre-r16 plan; DOUBLE adds the non-finite cases). hg/sub: COMPILED binary searches over the heavy
-    // set ([[graft.functions.QuantileSliceKey]]/[[HeavySubKey]] — a
+    // to the pre-r16 plan; DOUBLE scales x before the offset and, on a
+    // column holding ±Inf or NaN, adds the non-finite cases). hg/sub:
+    // COMPILED binary searches over the heavy set
+    // ([[graft.functions.QuantileSliceKey]]/[[HeavySubKey]] — a
     // when-chain form overflowed Janino's 64 KB method limit and
     // dropped the projection to interpreted mode, measured 4-10x).
     // Ordering stays exact: within a linear slice, hg = 2*|{h < x}| +
@@ -431,13 +429,36 @@ object Relational {
     val slc =
       if (n < MinSliceRows) lit(0L)
       else if (isDouble) {
+        // the linear spans cover FINITE values only; -Inf, +Inf and NaN
+        // (Spark orders NaN above +Inf) get slices of their own. Only a
+        // column holding one of them pays a second probe for its finite
+        // min/max and the per-row cases.
+        val (lo0, hi0) = (bRow.getDouble(0), bRow.getDouble(1))
+        val allFinite = !lo0.isInfinite && !hi0.isInfinite && !hi0.isNaN
         val (lo, hi) =
-          if (bRow.isNullAt(4)) (0.0, 0.0) else (bRow.getDouble(4), bRow.getDouble(5))
-        val span = math.max(java.lang.Double.MIN_NORMAL, (hi - lo) / slices)
-        when(isnan(col("x")), lit(slices + 2L))
+          if (allFinite) (lo0, hi0)
+          else {
+            val fx = when(!isnan(col("x")) &&
+              abs(col("x")) =!= lit(Double.PositiveInfinity), col("x"))
+            val f = rows.agg(min(fx), max(fx)).head()
+            if (f.isNullAt(0)) (0.0, 0.0) else (f.getDouble(0), f.getDouble(1))
+          }
+        // No step may overflow, even for a column spanning more than
+        // Double.MaxValue (lo = -1e308, hi = 1e308): the span is
+        // hi/slices - lo/slices, not (hi - lo)/slices, and x is scaled
+        // before the offset is taken. A span of at least ulp(max |x|)
+        // keeps x/span within 2^53 when hi and lo (nearly) coincide.
+        // Division by a positive constant, subtraction of a constant,
+        // floor and the clamp are all monotone, so slices stay ordered.
+        val span = Seq(java.lang.Double.MIN_NORMAL, hi / slices - lo / slices,
+          math.ulp(math.max(math.abs(lo), math.abs(hi)))).max
+        val linear = least(lit(slices.toLong),
+          floor(col("x") / lit(span) - lit(lo / span)).cast("long"))
+        if (allFinite) linear
+        else when(isnan(col("x")), lit(slices + 2L))
           .when(col("x") === lit(Double.PositiveInfinity), lit(slices + 1L))
           .when(col("x") === lit(Double.NegativeInfinity), lit(-1L))
-          .otherwise(floor((col("x") - lit(lo)) / lit(span)).cast("long"))
+          .otherwise(linear)
       } else {
         val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
         val span = math.max(1L, (hi - lo) / slices + 1)

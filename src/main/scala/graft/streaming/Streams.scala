@@ -24,12 +24,12 @@ import graft.sources.Tables
   * file are judged for lateness against the PREVIOUS batch's
   * watermark, so no real row is dropped, and the watermark the
   * sentinel sets flushes every real window in the one no-data batch
-  * that follows. Chains of stateful operators that need more than one
-  * advance get one extra sentinel FILE per extra advance. The file
-  * feed is the production shape (readStream over arriving files): the
-  * scan is distributed and task binaries stay small — the previous
-  * MemoryStream feed embedded the whole collected table
-  * (~3.5 MiB at sf0.1) in every task it shipped. Because files are
+  * that follows — through every stage of a chain of stateful
+  * operators, since the watermark propagates per operator within a
+  * batch. The file feed is the production shape (readStream over
+  * arriving files): the scan is distributed and task binaries stay
+  * small — the previous MemoryStream feed embedded the whole collected
+  * table (~3.5 MiB at sf0.1) in every task it shipped. Because files are
   * staged in event-time order, nothing real is ever late, so the
   * streaming result equals the batch aggregation — which is what the
   * DuckDB oracle checks. Late/out-of-order behavior (actual drops) is
@@ -73,39 +73,22 @@ object Streams {
         col("value"))
 
   private val stagingCache =
-    new scala.collection.concurrent.TrieMap[(String, Boolean, Int, String), File]()
-
-  /** Far-future sentinel row number `k` (1-based), 30 min apart: far
-    * enough ahead that the watermark it sets (sentinel − max delay,
-    * 10 min) passes every real window's END, including the last
-    * session's last-event + 5 min gap; far enough apart that the outer
-    * join's ±10 min window cannot pair two sentinels. Every sentinel
-    * has event_id/user −1 and type `Sentinel`, so each query's sentinel
-    * exclusion covers them all. */
-  private def sentinel(spark: SparkSession, hiMs: Long, k: Int): DataFrame = {
-    import spark.implicits._
-    Seq(Ev(-1L, new java.sql.Timestamp(hiMs + k * 30 * 60 * 1000L),
-      -1L, Sentinel, 0.0)).toDS().toDF()
-  }
+    new scala.collection.concurrent.TrieMap[(String, Boolean, String), File]()
 
   /** Stage the events table as a time-ordered file feed:
     * `NumChunks` parquet files split on the event-time midpoint, then
     * (optionally) a duplicates file re-sending the newest 100 events
     * (within the watermark horizon — exercises at-least-once repair).
-    * The first sentinel row is FOLDED into the last of those files
-    * (chunk 1, or the duplicates file), so the feed costs no batch of
-    * its own for it; each further watermark advance a chain of
-    * stateful operators needs (`advances` − 1 of them) is one more
-    * sentinel file. File mtimes are set strictly increasing —
+    * The far-future sentinel row is FOLDED into the last of those
+    * files (chunk 1, or the duplicates file), so the feed costs no
+    * batch of its own for it. File mtimes are set strictly increasing —
     * FileStreamSource processes files in mtime order, so arrival order
     * is event-time order and nothing real is late. An empty table
     * still feeds the sentinel, so every query yields an empty result
-    * WITH its schema. Memoized per (dir, dupes, advances, data
-    * fingerprint); cleaned up by a shutdown hook. */
-  private def staged(spark: SparkSession, dir: String, withDupes: Boolean,
-                     advances: Int = 1): File =
-    stagingCache.getOrElseUpdate(
-      (dir, withDupes, advances, graft.Fs.tableFingerprint(dir, "events")), {
+    * WITH its schema. Memoized per (dir, dupes, data fingerprint);
+    * cleaned up by a shutdown hook. */
+  private def staged(spark: SparkSession, dir: String, withDupes: Boolean): File =
+    stagingCache.getOrElseUpdate((dir, withDupes, graft.Fs.tableFingerprint(dir, "events")), {
       val ev = events(spark, dir)
       val mm = ev.agg(min("ts").as("lo"), max("ts").as("hi")).head()
       val (loMs, hiMs) =
@@ -125,9 +108,15 @@ object Streams {
           ev.where(col("ts") > lit(new java.sql.Timestamp(midMs)))) ++
           (if (withDupes) Seq(ev.orderBy(desc("ts"), desc("event_id")).limit(100))
            else Nil)
+      // Sentinel far enough ahead that watermark (= sentinel − max delay,
+      // 10 min) passes every real window's END, including the last
+      // session's last-event + 5 min gap. event_id/user −1 and type
+      // `Sentinel`, which every query's sentinel exclusion matches.
+      import spark.implicits._
+      val sentinel = Seq(Ev(-1L, new java.sql.Timestamp(hiMs + 30 * 60 * 1000L),
+        -1L, Sentinel, 0.0)).toDS().toDF()
       realFiles.init.foreach(writeOne)
-      writeOne(realFiles.last.unionByName(sentinel(spark, hiMs, 1)))
-      (2 to advances).foreach(k => writeOne(sentinel(spark, hiMs, k)))
+      writeOne(realFiles.last.unionByName(sentinel))
       root
     })
 
@@ -184,8 +173,8 @@ object Streams {
 
   private def run(spark: SparkSession, dir: String, withDupes: Boolean,
                   build: DataFrame => DataFrame,
-                  rocksdb: Boolean = false, advances: Int = 1): DataFrame = {
-    val feed = staged(spark, dir, withDupes, advances)
+                  rocksdb: Boolean = false): DataFrame = {
+    val feed = staged(spark, dir, withDupes)
     val root = graft.Engine.workDir("graft-sink-")
     val data = new File(root, "data")
     val ckpt = new File(root, "ckpt")
@@ -365,16 +354,12 @@ object Streams {
     * `max()` output cannot push below the aggregate, so sentinel rows
     * advance the watermark, flow through both stages as their own
     * isolated far-future windows, and only their finished window rows
-    * are dropped.
-    *
-    * Its feed keeps a second sentinel file — a second watermark
-    * advance for stage 2 — which the final-window spec was written
-    * against. Spark 4.1 propagates the watermark per operator, so the
-    * first advance already flushes the last real window through BOTH
-    * stages in the same batch (measured at sf0.001, sf0.01 and sf0.1);
-    * dropping the second file is an open ROADMAP item. */
+    * are dropped. One watermark advance is enough for the chain: the
+    * watermark propagates per stateful operator within a batch, so the
+    * flush batch that emits the last real window from stage 1 also
+    * passes it through stage 2 and finalizes it there. */
   def topEvent(spark: SparkSession, dir: String): DataFrame =
-    run(spark, dir, withDupes = false, advances = 2, build = ds =>
+    run(spark, dir, withDupes = false, ds =>
       ds.withWatermark("ts", "2 minutes")
         .groupBy(window(col("ts"), "1 minute"), col("event_type"))
         .agg(count(lit(1)).as("cnt"))

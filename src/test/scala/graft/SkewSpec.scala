@@ -97,4 +97,15 @@ class SkewSpec extends SparkSuiteBase {
     assert(bad === 0L, "sliced ranks must equal plain window ranks")
     assert(keys > 1, s"heavy NaN must sub-split by id, got $keys keys")
   }
+
+  test("skew slices: DOUBLE values spanning more than Double.MaxValue slice linearly, exactly") {
+    // -1e308 .. 1e308: hi - lo overflows to +Inf, so a span computed
+    // from it would put every row in one slice (or fail the cast)
+    val df = spark.range(10001L).select(lit("g").as("grp"), col("id"),
+      ((col("id") - 5000L).cast("double") * 2e304).as("x"))
+    val (n, bad, keys) = slicedVsPlain(df, lit(true))
+    assert(n === 10001L)
+    assert(bad === 0L, "sliced ranks must equal plain window ranks")
+    assert(keys >= 8, s"finite values must spread over the slices, got $keys keys")
+  }
 }

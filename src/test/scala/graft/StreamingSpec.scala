@@ -547,7 +547,9 @@ class StreamingSpec extends SparkSuiteBase {
 
   test("chained stateful aggs (topEvent) equal batch, INCLUDING the final window") {
     import org.apache.spark.sql.functions._
-    val streamed = graft.streaming.Streams.topEvent(spark, sf).collect()
+    val (rows, nBatches) =
+      withBatchCount(graft.streaming.Streams.topEvent(spark, sf).collect())
+    val streamed = rows
       .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap
     val batch = graft.sources.Tables(spark, sf, "events")
       .groupBy(date_format(date_trunc("minute", col("ts")),
@@ -559,11 +561,14 @@ class StreamingSpec extends SparkSuiteBase {
       .collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2)))).toMap
     assert(streamed === batch)
-    // the final window is the one a single watermark advance cannot
-    // flush through BOTH stages (needs the second sentinel): pin it
+    // the final window is the last to flush through BOTH stages: the
+    // one watermark advance of the folded sentinel must carry it out of
+    // stage 2 in the same flush batch that emits it from stage 1
     val lastW = batch.keys.max
     assert(streamed.contains(lastW), s"final window $lastW missing — " +
-      "second-stage flush regression (double-sentinel cascade broken)")
+      "second-stage flush regression")
+    // 2 data batches (the sentinel rides in the last) + 1 flush batch
+    assert(nBatches === 3, "topevent: micro-batches")
   }
 
   test("streamed word-count fold ≡ the batch flagship count (kappa bridge, multi-batch)") {
@@ -728,8 +733,7 @@ class StreamingSpec extends SparkSuiteBase {
         col("cnt"))
     val dedup = ev.select("event_id")
     // 2 data batches (the sentinel rides in the last) + 1 flush batch;
-    // dedup's duplicates file is one more data batch; topevent's chain
-    // needs a second advance, i.e. one sentinel file more
+    // dedup's duplicates file is one more data batch
     val cases = Seq(
       ("tumbling", () => Streams.tumbling(spark, sf), tumbling, 3),
       ("sliding", () => Streams.sliding(spark, sf), sliding, 3),
@@ -742,8 +746,6 @@ class StreamingSpec extends SparkSuiteBase {
       assert(got === want, s"$name: streamed result must equal the batch oracle")
       assert(n === wantBatches, s"$name: micro-batches")
     }
-    val (_, nTop) = withBatchCount(Streams.topEvent(spark, sf).collect())
-    assert(nTop === 4, "topevent: micro-batches")
   }
 
   test("empty events table: tumbling and dedup return an empty result WITH schema") {
