@@ -71,9 +71,6 @@ object Dedup {
     * shingle text (at 100 TB the distinct+join traffic is the cost; a
     * 64-bit hash keeps set sizes/intersections exact up to a ~2⁻⁶⁴
     * birthday term). */
-  private def shingles(spark: SparkSession, dir: String): DataFrame =
-    shingles(Tables(spark, dir, "documents"))
-
   private[graft] def shingles(docs: DataFrame): DataFrame =
     docs
       .withColumn("ts", expr(TextOps.TokensSql))

@@ -839,7 +839,7 @@ object Graphs {
     // no-op on a Project), plus the round-0 hub cut
     var hubCut: DataFrame = hub
     var authCut: DataFrame = null
-    for (r <- 1 to rounds) {
+    for (_ <- 1 to rounds) {
       val prevAuthCut = authCut
       val (a, ac) = normalized(e.join(hub, e("src") === hub("node"))
         .groupBy(e("dst").as("node")).agg(sum("s").as("raw")))

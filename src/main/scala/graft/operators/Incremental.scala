@@ -132,8 +132,6 @@ object Incremental {
   private val wcCache =
     new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
 
-  def clearWordStateCache(): Unit = wcCache.clear()
-
   /** Word-count partials: q_wordcount's own aggregation body (shared
     * definition — TextOps.wordCountPartials — so the tokenizer cannot
     * drift between the incremental claim and the flagship count). */
@@ -247,8 +245,6 @@ object Incremental {
   private val topkCache =
     new scala.collection.concurrent.TrieMap[(String, String), (String, java.sql.Timestamp)]()
 
-  def clearTopkStateCache(): Unit = topkCache.clear()
-
   /** Per-month capped top-k partials over `df` — q_group_topk's
     * aggregation body (same aggregator, same k), minus the explode. */
   private def topkPartials(df: DataFrame, k: Int): DataFrame =
@@ -303,8 +299,6 @@ object Incremental {
 
   private val hllCache =
     new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearHllStateCache(): Unit = hllCache.clear()
 
   /** Staged HLL register state over the base slice (l_orderkey below
     * the top-decile cut — the key-space arrival convention of the doc
@@ -365,8 +359,6 @@ object Incremental {
 
   private val joinCache =
     new scala.collection.concurrent.TrieMap[(String, String), (String, (java.sql.Timestamp, java.sql.Timestamp))]()
-
-  def clearJoinStateCache(): Unit = joinCache.clear()
 
   /** Monthly revenue partials over any (orders-slice ⋈ lineitem-slice):
     * exact revenue cents per line (the pinned

@@ -308,16 +308,22 @@ object Multimodal {
     * the accepting reader called directly. Same parser class, probed
     * once instead of exception-probed 50k times. */
   private lazy val wavReader: javax.sound.sampled.spi.AudioFileReader = {
-    val ref = probeEncodeOne(0L).payload
+    val ref = encodeWav(0L).payload
     audioReaders.find { r =>
       try { r.getAudioInputStream(new java.io.ByteArrayInputStream(ref)); true }
       catch { case _: javax.sound.sampled.UnsupportedAudioFileException => false }
     }.getOrElse(throw new IllegalStateException("no AudioFileReader SPI accepts WAV"))
   }
 
-  /** Scratch single-row forms for graft.Probe's codec micro-benchmark
-    * (not part of the driver contract). */
-  private[graft] def probeEncodeOne(id: Long): AudioItem = {
+  /** Stage one REAL WAV clip per document (8 kHz, 16-bit, mono). */
+  def audioTable(docs: DataFrame): Dataset[AudioItem] = {
+    import docs.sparkSession.implicits._
+    docs.select("doc_id").as[Long].map(encodeWav(_))
+  }
+
+  /** One document's clip: its [[audioSamples]] as little-endian PCM in a
+    * WAV container, written through the once-resolved [[wavWriter]]. */
+  private def encodeWav(id: Long): AudioItem = {
     val samples = audioSamples(id)
     val pcm = new Array[Byte](samples.length * 2)
     var i = 0
@@ -332,44 +338,6 @@ object Multimodal {
     val bos = new java.io.ByteArrayOutputStream()
     wavWriter.write(ais, javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
     AudioItem(id, bos.toByteArray)
-  }
-  private[graft] def probeDecodeOne(m: AudioItem): Long = {
-    val ais = wavReader.getAudioInputStream(
-      new java.io.ByteArrayInputStream(m.payload))
-    val bytes = ais.readNBytes(
-      ais.getFrameLength.toInt * ais.getFormat.getFrameSize)
-    var sum = 0L
-    var i = 0
-    while (i < bytes.length / 2) {
-      sum += ((bytes(2 * i) & 0xFF) | (bytes(2 * i + 1) << 8)).toShort
-      i += 1
-    }
-    sum
-  }
-
-  /** Stage one REAL WAV clip per document (8 kHz, 16-bit, mono). */
-  def audioTable(docs: DataFrame): Dataset[AudioItem] = {
-    import docs.sparkSession.implicits._
-    docs.select("doc_id").as[Long].mapPartitions { iter =>
-      val writer = wavWriter // resolve the codec once, not per row
-      iter.map { id =>
-        val samples = audioSamples(id)
-        val pcm = new Array[Byte](samples.length * 2)
-        var i = 0
-        while (i < samples.length) {
-          pcm(2 * i) = (samples(i) & 0xFF).toByte
-          pcm(2 * i + 1) = ((samples(i) >> 8) & 0xFF).toByte
-          i += 1
-        }
-        val fmt = new javax.sound.sampled.AudioFormat(8000f, 16, 1, true, false)
-        val ais = new javax.sound.sampled.AudioInputStream(
-          new java.io.ByteArrayInputStream(pcm), fmt, samples.length.toLong)
-        val bos = new java.io.ByteArrayOutputStream()
-        writer.write(ais,
-          javax.sound.sampled.AudioFileFormat.Type.WAVE, bos)
-        AudioItem(id, bos.toByteArray)
-      }
-    }
   }
 
   /** REAL audio decode: the WAV reader SPI parses the container

@@ -145,8 +145,6 @@ object Regression {
   private val stateCache =
     new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
 
-  def clearLinregStateCache(): Unit = stateCache.clear()
-
   /** Base-slice sufficient statistics staged as a 1-row parquet;
     * returns (root, id cutoff). */
   private[graft] def stagedSumsState(spark: SparkSession, dir: String): (String, Long) =

@@ -301,7 +301,7 @@ object Relational {
     * percentile = round(builtin-equivalent interpolation, 4). */
   private[graft] def quantilesByRank(rows: DataFrame,
       ps: Seq[(Double, String)], slices: Int): DataFrame = {
-    val ranked = groupedRanksDouble(rows, slices)
+    val ranked = groupedRanks(rows, slices)
     // group sizes from the RAW rows (not from `ranked` — that would
     // re-run the whole windowed rank pipeline just to count)
     val nDf = rows.groupBy("grp").agg(count(lit(1)).as("n"))
@@ -328,20 +328,19 @@ object Relational {
     picked.select(outCols: _*)
   }
 
-  /** [[groupedRanks]] for DOUBLE-valued x — same skew-hardened
-    * quantile-sliced shape (see [[skewSliced]]). */
-  private[graft] def groupedRanksDouble(rows: DataFrame,
-      slices: Int): DataFrame = rankSliced(rows, slices)
+  /** Inputs below this row count keep a single window task per group —
+    * slicing overhead (boundary probe, 3-key offsets join) buys nothing
+    * at a size one task sorts instantly. */
+  private val MinSliceRows = 5000L
 
   /** Skew-hardened slice keys for the grouped-rank machinery (r16;
     * VERDICT r15 #7 / ADVICE r15). The r15 slicing cut the VALUE RANGE
     * linearly, so a heavily-duplicated value — the hi == lo degenerate
     * included — collapsed into ONE window task: exactly the unbounded
     * per-group funnel this design exists to avoid (§2.5). The linear
-    * spans STAY (for BIGINT x the no-skew path is plan-identical to r15
-    * and costs one arithmetic op per row; DOUBLE x uses an
-    * overflow-free span, and a column holding ±Inf or NaN pays a second
-    * probe and per-row cases); what r16 adds is HEAVY-VALUE
+    * spans STAY, computed without overflow for any column (a couple of
+    * arithmetic ops per row; a DOUBLE column holding ±Inf or NaN pays
+    * a second probe and per-row cases); what r16 adds is HEAVY-VALUE
     * protection: a sampled quantile sketch riding the same probe
     * aggregate detects values owning ≳ 2/slices of the mass, each such
     * value gets its own window key (hg) and is sub-split by id ranges
@@ -351,11 +350,6 @@ object Relational {
     * globalRowIds ledger discipline). Ranks are IDENTICAL whatever the
     * split, so callers' oracle hashes cannot move. Returns None on
     * empty input. */
-  /** Inputs below this row count keep a single window task per group —
-    * slicing overhead (boundary probe, 3-key offsets join) buys nothing
-    * at a size one task sorts instantly. */
-  private val MinSliceRows = 5000L
-
   private[graft] def skewSliced(rows: DataFrame, slices: Int): Option[DataFrame] = {
     require(slices >= 2, s"need >= 2 slices, got $slices")
     val fracs = (1 until slices).map(i => i.toDouble / slices)
@@ -415,8 +409,7 @@ object Relational {
           .collect().map(r => key(r.get(0)) -> r.getSeq[Long](1).distinct).toMap
       }
     // slc: r15's exact linear value-range slice (cheap codegen'd
-    // arithmetic — for BIGINT the common no-skew path is byte-identical
-    // to the pre-r16 plan; DOUBLE scales x before the offset and, on a
+    // arithmetic that never subtracts across the range; DOUBLE, on a
     // column holding ±Inf or NaN, adds the non-finite cases). hg/sub:
     // COMPILED binary searches over the heavy set
     // ([[graft.functions.QuantileSliceKey]]/[[HeavySubKey]] — a
@@ -460,9 +453,14 @@ object Relational {
           .when(col("x") === lit(Double.NegativeInfinity), lit(-1L))
           .otherwise(linear)
       } else {
+        // hi - lo and x - lo overflow for a column spanning more than
+        // Long.MaxValue, so both sides are divided before the offset is
+        // taken. Truncating division by a positive constant is
+        // monotone, so slices stay ordered; the key is >= 0 and at most
+        // (hi - lo) / span + 1 <= 3 * slices before the clamp.
         val (lo, hi) = (bRow.getLong(0), bRow.getLong(1))
-        val span = math.max(1L, (hi - lo) / slices + 1)
-        expr(s"(x - ${lo}L) div ${span}L")
+        val span = math.max(1L, hi / slices - lo / slices)
+        least(lit(slices.toLong), expr(s"x div ${span}L") - lit(lo / span))
       }
     val (hg, sub) =
       if (heavies.isEmpty) (lit(0L), lit(0L))
@@ -484,29 +482,6 @@ object Relational {
       }
     Some(rows.withColumn("slc", slc).withColumn("hg", hg)
       .withColumn("sub", sub))
-  }
-
-  /** Shared rank assembly over [[skewSliced]] keys: exclusive prefix
-    * offsets via a distributed running-sum window over the (grp, slc,
-    * sub) count table (≤ ~2·slices + heavy sub-buckets rows per grp
-    * partition), local (x, id) windows per (grp, slc, sub). */
-  private def rankSliced(rows: DataFrame, slices: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    skewSliced(rows, slices) match {
-      case None => rows.withColumn("rk", lit(0L)).where(lit(false))
-      case Some(sliced) =>
-        val wOff = Window.partitionBy("grp").orderBy("slc", "hg", "sub")
-          .rowsBetween(Window.unboundedPreceding, -1)
-        val offDf = sliced.groupBy("grp", "slc", "hg", "sub")
-          .agg(count(lit(1)).as("c"))
-          .withColumn("off", coalesce(sum("c").over(wOff), lit(0L)))
-          .drop("c")
-        val w = Window.partitionBy("grp", "slc", "hg", "sub")
-          .orderBy(col("x"), col("id"))
-        sliced.join(offDf, Seq("grp", "slc", "hg", "sub"))
-          .withColumn("rk", row_number().over(w).cast("long") + col("off"))
-          .drop("slc", "hg", "sub", "off")
-    }
   }
 
   /** B13b q_quantiles_approx: the 100 TB quantile path — t-digest-style
@@ -1117,17 +1092,18 @@ object Relational {
       .select(col("o_orderpriority").as("grp"), col("o_orderkey").as("id"),
         round(col("o_totalprice") * 100).cast("long").as("x")), 64)
 
-  /** Grouped two-pass range-sliced rank (shared by `giniByGroup` and
-    * `madOutliers`): adds `rk`, the 1-based within-group rank under the
-    * total order (x, id), WITHOUT ever partitioning a window by grp
-    * alone — global value slices, exclusive offsets via a distributed
-    * running-sum window over the (grp, slice) counts (≤ slices rows per
-    * grp partition, so the offset stage parallelizes across groups and
-    * never visits the driver), local windows per (grp, slice). The
-    * dominant group never funnels into one task; 10⁶+ groups never
-    * funnel through a driver collect. Expects (grp: String, id: Long
-    * unique, x: Long); empty in → empty out, schema intact. */
-  private[graft] def groupedRanks(rows: DataFrame, slices: Int): DataFrame =
+  /** Grouped two-pass range-sliced rank (shared by `giniByGroup`,
+    * `madOutliers` and `quantilesByRank`): adds `rk`, the 1-based
+    * within-group rank under the total order (x, id), WITHOUT ever
+    * partitioning a window by grp alone — global value slices,
+    * exclusive offsets via a distributed running-sum window over the
+    * (grp, slice) counts (≤ slices rows per grp partition, so the
+    * offset stage parallelizes across groups and never visits the
+    * driver), local windows per (grp, slice). The dominant group never
+    * funnels into one task; 10⁶+ groups never funnel through a driver
+    * collect. Expects (grp: String, id: Long unique, x: Long or
+    * Double); empty in → empty out, schema intact. */
+  private[graft] def groupedRanks(rows: DataFrame, slices: Int): DataFrame = {
     // exclusive prefix offsets computed DISTRIBUTIVELY: a running sum
     // over the (grp, slc, sub) count table, partitioned by grp (a few
     // rows per partition — tiny windows spread across all groups). No
@@ -1137,7 +1113,23 @@ object Relational {
     // where a forced broadcast of groups×slices rows would not fit.
     // Slice keys are the skew-hardened quantile boundaries of
     // [[skewSliced]] (r16) — heavy duplicate values sub-split by id.
-    rankSliced(rows, slices)
+    import org.apache.spark.sql.expressions.Window
+    skewSliced(rows, slices) match {
+      case None => rows.withColumn("rk", lit(0L)).where(lit(false))
+      case Some(sliced) =>
+        val wOff = Window.partitionBy("grp").orderBy("slc", "hg", "sub")
+          .rowsBetween(Window.unboundedPreceding, -1)
+        val offDf = sliced.groupBy("grp", "slc", "hg", "sub")
+          .agg(count(lit(1)).as("c"))
+          .withColumn("off", coalesce(sum("c").over(wOff), lit(0L)))
+          .drop("c")
+        val w = Window.partitionBy("grp", "slc", "hg", "sub")
+          .orderBy(col("x"), col("id"))
+        sliced.join(offDf, Seq("grp", "slc", "hg", "sub"))
+          .withColumn("rk", row_number().over(w).cast("long") + col("off"))
+          .drop("slc", "hg", "sub", "off")
+    }
+  }
 
   /** df form: expects (grp: String, id: Long unique, x: Long ≥ 0). */
   def giniByGroup(rows: DataFrame, slices: Int): DataFrame =

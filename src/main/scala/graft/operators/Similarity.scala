@@ -71,15 +71,6 @@ object Similarity {
       transform(col("e"),
         x => round(x * lit(Clustering.FpScale)).cast(LongType)))
 
-  /** Per-centroid (d2, cid) structs over the quantized column `eq` —
-    * BIGINT-exact squared distances, reassociation-proof, so list
-    * assignment and probe ranking are bit-reproducible in any engine. */
-  private def distStructsQ(cs: Array[Array[Long]]): Seq[Column] =
-    cs.zipWithIndex.map { case (c, i) =>
-      struct(graft.functions.VectorExprs.sqDistLong(col("eq"), lit(c)).as("d2"),
-        lit(i).as("cid"))
-    }.toSeq
-
   /** Cosine between the aliased sides — codegen'd dot product, fold
     * order identical to the oracle's list_reduce (bit-parity). On the
     * n·k pair joins this kernel IS the profile; the interpreted
@@ -764,32 +755,6 @@ object Similarity {
         Seq("t", "bgrp"), Seq("vec_id"))
       (root.getAbsolutePath, np, nt)
     })
-
-  /** Scratch instrumentation for graft.Probe (not part of the driver
-    * contract): the stagedAppendedLshIndex steps, individually timed. */
-  private[graft] def probeLshAppendParts(spark: SparkSession, dir: String,
-      timed: String => (=> Any) => Unit): Unit = {
-    val n = corpusSize(spark, dir)
-    val cut = n - math.max(1L, n / 10)
-    val (np, nt) = (lshPlanes(n), lshTables(n))
-    val g = lshBucketGroups(n)
-    val v = vecs(spark, dir)
-    val root = new java.io.File(stableRoot(dir), "lsh_probe_inc")
-    timed("base_write")(graft.sources.Sinks.writePartitioned(
-      lshIndexRows(v.where(col("vec_id") < cut), np, nt, g),
-      root.getAbsolutePath, Seq("t", "bgrp"), Seq("vec_id")))
-    timed("delta_rows_count")(
-      lshIndexRows(v.where(col("vec_id") >= cut), np, nt, g).count())
-    timed("delta_append")(graft.sources.Sinks.appendPartitioned(
-      lshIndexRows(v.where(col("vec_id") >= cut), np, nt, g),
-      root.getAbsolutePath, Seq("t", "bgrp"), Seq("vec_id")))
-    timed("delta_append2")(graft.sources.Sinks.appendPartitioned(
-      lshIndexRows(v.where(col("vec_id") >= cut), np, nt, g),
-      root.getAbsolutePath, Seq("t", "bgrp"), Seq("vec_id")))
-    timed("compact")(graft.sources.Sinks.compactPartitioned(
-      spark, root.getAbsolutePath, Seq("t", "bgrp"), Seq("vec_id")))
-    graft.Fs.rmRf(root)
-  }
 
   /** North-star q_simsearch_lsh_indexed: the multi-table search served
     * from the persisted slim index — results ≡ live [[lshTopK]]

@@ -1811,8 +1811,6 @@ object TextOps {
   private val docLenCache =
     new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
 
-  def clearDocLenCache(): Unit = docLenCache.clear()
-
   /** Doc-length sidecar for [[bm25]]: (doc_id, dl) with dl ≡ Σ tf per
     * doc, staged beside the index with the corpus token total T. One
     * small table — |docs| rows, two ints — the standard companion
@@ -1861,10 +1859,6 @@ object TextOps {
         s"quotient bound $quot vs 2^63): reduce Bm25Scale")
   }
 
-  /** BM25 k1 as the exact rational 6/5 (term-frequency saturation). */
-  val Bm25K1: (Int, Int) = (6, 5)
-  /** BM25 b as the exact rational 3/4 (doc-length normalization). */
-  val Bm25B: (Int, Int) = (3, 4)
   /** Fixed-point score scale (integer-scaled BM25 scores). */
   val Bm25Scale = 10000L
 
@@ -1954,8 +1948,6 @@ object TextOps {
 
   private val docLenAppendCache =
     new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearDocLenAppendCache(): Unit = docLenAppendCache.clear()
 
   /** The dl sidecar maintained base + append (disjoint doc slices →
     * disjoint exact dl rows; same cut as the postings append). Each

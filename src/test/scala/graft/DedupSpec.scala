@@ -433,7 +433,7 @@ class DedupSpec extends SparkSuiteBase {
         .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq.sorted
       val compOf = comps.toMap
       val chars = docs.toMap
-      val want = docs.map { case (d, nc) =>
+      val want = docs.map { case (d, _) =>
         val c = compOf.getOrElse(d, d)
         val members = docs.collect {
           case (m, _) if compOf.getOrElse(m, m) == c => m }

@@ -451,7 +451,7 @@ class GraphsSpec extends SparkSuiteBase {
       // count In-group picks: step k ≥ 2 landing on a COMMON neighbor
       // of prev and cur that is not a return
       path.sliding(3).foreach {
-        case Seq(p0, p1, p2) if p2 != p0 =>
+        case Seq(p0, _, p2) if p2 != p0 =>
           if (adj(p0).contains(p2)) inPicks += 1
         case _ =>
       }

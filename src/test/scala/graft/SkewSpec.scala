@@ -60,7 +60,7 @@ class SkewSpec extends SparkSuiteBase {
     import org.apache.spark.sql.expressions.Window
     val heavyKeys = graft.operators.Relational.skewSliced(df, 16).get
       .where(heavy).select("slc", "hg", "sub").distinct().count()
-    val ranked = graft.operators.Relational.groupedRanksDouble(df, 16)
+    val ranked = graft.operators.Relational.groupedRanks(df, 16)
       .select(col("grp"), col("id"), col("rk"))
     val want = df.withColumn("rk_ref", row_number()
       .over(Window.partitionBy("grp").orderBy("x", "id")).cast("long"))
@@ -107,5 +107,18 @@ class SkewSpec extends SparkSuiteBase {
     assert(n === 10001L)
     assert(bad === 0L, "sliced ranks must equal plain window ranks")
     assert(keys >= 8, s"finite values must spread over the slices, got $keys keys")
+  }
+
+  test("skew slices: BIGINT values spanning Long.MinValue to Long.MaxValue slice linearly, exactly") {
+    // hi - lo and x - lo both overflow a Long here, which fails the
+    // slice key under ANSI mode if either is computed
+    val df = spark.range(10001L).select(lit("g").as("grp"), col("id"),
+      when(col("id") === 0L, lit(Long.MinValue))
+        .when(col("id") === 10000L, lit(Long.MaxValue))
+        .otherwise((col("id") - 5000L) * 900000000000000L).as("x"))
+    val (n, bad, keys) = slicedVsPlain(df, lit(true))
+    assert(n === 10001L)
+    assert(bad === 0L, "sliced ranks must equal plain window ranks")
+    assert(keys >= 8, s"values must spread over the slices, got $keys keys")
   }
 }

@@ -55,7 +55,6 @@ class WinnowSpec extends SparkSuiteBase {
   }
 
   test("q_winnow: fixed-density selection; every fingerprint re-hashes to its gram") {
-    val docs = operators.Dedup // touch nothing; just use catalog form
     val rows = TextOps.winnow(spark, sf).collect()
     assert(rows.nonEmpty)
     // density: winnowing keeps ~2/(W+1) of positions — allow wide slack
