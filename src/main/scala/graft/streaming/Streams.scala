@@ -37,9 +37,9 @@ import graft.sources.Tables
   * batch oracle cannot reach.
   *
   * Scale notes: state per key is bounded by the watermark horizon;
-  * micro-batch shuffles use 8 partitions (state-store commit cost is
-  * task-count-bound at this batch size; a production job sizes this to
-  * state volume). Results flow through a checkpointed parquet FILE sink
+  * micro-batch shuffles use 8 partitions (each is one state-store
+  * commit per stateful operator per batch; a production job sizes this
+  * to state volume). Results flow through a checkpointed parquet FILE sink
   * and are read back as a lazy batch scan over its commit log — nothing,
   * input or output, ever materializes on the driver.
   */
