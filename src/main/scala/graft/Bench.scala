@@ -13,9 +13,9 @@ import scala.util.control.NonFatal
   * forced end-to-end with a noop-format write (materializes every output
   * column; `count()` would let Catalyst prune the computed columns away and
   * under-measure). Each query gets ONE untimed warmup before its timed
-  * runs, and product-state memos (K-Means fit cache) are cleared before
-  * every timed run — min-of-N measures steady-state compute, never a
-  * cache hit or a cold-JIT stall. A failed query reports value -1 and is
+  * runs, and the Model and Index artifacts (`Artifacts.clear` by kind)
+  * are cleared before every timed run — min-of-N measures steady-state
+  * compute, never a cache hit or a cold-JIT stall. A failed query reports value -1 and is
   * listed in the "failed" array (stderr alone would be discarded by the
   * documented 2>/dev/null invocation).
   *
@@ -63,51 +63,22 @@ object Bench {
     //    compilation, parquet footer cache, and one-time INPUT staging
     //    (the streaming file feed) are not billed to run 1; without it
     //    min-of-N can report a cold-JVM stall as the query's cost.
-    //  - memoized PRODUCT state (the K-Means fit cache) is cleared before
-    //    EVERY timed run, so q_kmeans times the full Lloyd loop each run
-    //    rather than a cache hit. The streaming feed staging memo is NOT
-    //    cleared: the feed is input data (analogous to the testdata
-    //    parquet itself), and every timed run still executes the complete
-    //    streaming query over it.
-    // Product-state memos split by what a warm hit MEANS (ADVICE r7):
-    //  - result/model memos (K-Means fit, BPE merges, dup-component
-    //    labels): a warm hit replaces the row's compute with a cache
-    //    read and MASKS regressions — cleared before every headline
-    //    run and before every matrix rerun;
-    //  - staged INDICES (ivf cid-partitioned layout, dedup band +
-    //    shingle index): their one-time build cost is billed
-    //    explicitly by the lifecycle splits below, and a consumer row
-    //    probing a warm index still executes its full query — the
-    //    amortized steady state a standing corpus serves. The
-    //    headline loop clears these too (no headline query uses
-    //    them); the matrix rerun does NOT, so an index-consumer row
-    //    reports the consumer path, not a re-staging.
-    def clearModelMemos(): Unit = {
-      graft.operators.Clustering.clearFitCache()
-      graft.operators.TextOps.clearMergeCache()
-      graft.operators.Similarity.clearPqCache()
-      graft.operators.Similarity.clearSqCache()
-    }
-    def clearIndexMemos(): Unit = {
-      graft.operators.Similarity.clearIndexCache()
-      graft.operators.Similarity.clearKnnCache()
-      graft.operators.Dedup.clearBandIndexCache()
-      // the dup-component closure is an INDEX-class artifact as of r12:
-      // built once by the dedup_cc lifecycle split below, consumed warm
-      // by q_dedup_cc/stats/keep_best/split_leakage — so matrix reruns
-      // keep it (consumer rows bill serve cost, not a rebuild, and the
-      // r11 matrix-ordering memo artifact is gone)
-      graft.operators.Dedup.clearComponentCache()
-      graft.operators.Incremental.clearAllStateCaches()
-      graft.operators.TextOps.clearPostingsCache()
-      graft.operators.TextOps.clearPostingsAppendCache()
-      // the staged co-purchase graph (round 13) is index-class: built
-      // once by the graph_lifecycle split, served warm by the ~14
-      // graph consumer rows in the matrix
-      graft.operators.GraphIndex.clearGraphCache()
-      graft.operators.TextOps.clearDocCharLenCache()
-    }
-
+    //  - memoized artifacts are cleared by kind (`Artifacts.Kind`), split
+    //    by what a warm hit MEANS (ADVICE r7):
+    //    - Model (K-Means fits, PQ/IVFPQ/SQ models, BPE merges, PCA,
+    //      linreg fit): a warm hit replaces the row's compute with a
+    //      cache read and MASKS regressions — cleared before every
+    //      headline run and before every matrix rerun;
+    //    - Index (staged indices, the dup-component closure, incremental
+    //      states): the one-time build is billed by the lifecycle
+    //      splits below, and a consumer row probing a warm index still
+    //      executes its full query — the amortized steady state a
+    //      standing corpus serves. Cleared before every headline run;
+    //      the matrix rerun does NOT clear them, so an index-consumer
+    //      row reports the consumer path, not a re-staging;
+    //    - Input (stream feeds, layout and format copies): input data,
+    //      like the testdata parquet itself — never cleared; every timed
+    //      run still executes the complete query over it.
     val Runs = 2
     var failed = List.empty[String]
     var degraded = List.empty[String]
@@ -122,8 +93,8 @@ object Bench {
       var aborted = !warmupOk
       var r = 0
       while (!aborted && r < Runs) {
-        clearModelMemos()
-        clearIndexMemos()
+        Artifacts.clear(Artifacts.Model)
+        Artifacts.clear(Artifacts.Index)
         val t0 = System.nanoTime()
         try {
           runOnce()
@@ -155,9 +126,9 @@ object Bench {
     // on a host with a 2-3× noise band cannot distinguish a stall from
     // a regression (r9's 11.4 s pq_search / 15.8 s ivfpq_append_build
     // were exactly that ambiguity). `pre` runs before EACH timed run:
-    // for a BUILD metric it is that artifact's own cache clear (so both
-    // runs do the full cold build — per-artifact clears, not the
-    // aggregate ones, so sibling artifacts stay warm for the matrix);
+    // for a BUILD metric it is that artifact's own clear by name (so
+    // both runs do the full cold build — per-artifact clears, not the
+    // per-kind ones, so sibling artifacts stay warm for the matrix);
     // for a SEARCH metric it is a no-op (both runs probe the warm
     // artifact — the amortized steady state). No separate warmup: by
     // the time the lifecycle blocks run, the headline loop has fully
@@ -201,12 +172,10 @@ object Bench {
         } catch { case NonFatal(_) => -1.0 }))
     val ivfLifecycle: Seq[(String, Double)] =
       try {
-        val bIdx = timedN({
-          graft.operators.Clustering.clearFitCache()
-          graft.operators.Similarity.clearIvfIndexCache()
-        })(graft.operators.Similarity.stagedIvfIndex(spark, sfDir))
+        val bIdx = timedN(Artifacts.clear("kmeans", "kmeansfixed", "ivf_index"))(
+          graft.operators.Similarity.stagedIvfIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_simsearch_ivf_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.Similarity.clearIvfAppendCache())(
+        val bApp = timedN(Artifacts.clear("ivf_index_inc"))(
           graft.operators.Similarity.stagedAppendedIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_ivf_append")(spark, sfDir)))
         Seq("ivf_indexed_build_sec" -> bIdx, "ivf_indexed_search_sec" -> sIdx,
@@ -227,7 +196,7 @@ object Bench {
     // Recall rows guard quantizer changes the same way the ivf rows do.
     val pqLifecycle: Seq[(String, Double)] =
       try {
-        val bPq = timedN(graft.operators.Similarity.clearPqCache())(
+        val bPq = timedN(Artifacts.clear("pqbooks", "ivfpqmodel"))(
           graft.operators.Similarity.pqCodebooks(spark, sfDir))
         val sPq = timedN(())(force(SparkEntry.queries("q_simsearch_pq")(spark, sfDir)))
         Seq("pq_build_sec" -> bPq, "pq_search_sec" -> sPq) ++
@@ -244,7 +213,7 @@ object Bench {
     // build bills encode+partitioned-write only.
     val pqIndexLifecycle: Seq[(String, Double)] =
       try {
-        val bPqIdx = timedN(graft.operators.Similarity.clearPqIndexCache())(
+        val bPqIdx = timedN(Artifacts.clear("pq_index"))(
           graft.operators.Similarity.stagedPqIndex(spark, sfDir))
         val sPqIdx = timedN(())(force(SparkEntry.queries("q_simsearch_pq_indexed")(spark, sfDir)))
         Seq("pq_index_build_sec" -> bPqIdx, "pq_index_search_sec" -> sPqIdx)
@@ -258,16 +227,13 @@ object Bench {
     // ivfpq build bills fit+codebooks on BOTH runs; the catch restores
     // the memo if this step aborts (the ivf lifecycle above left it
     // warm on purpose — the matrix ivf rows must not silently change
-    // basis on this failure path). NOTE clearPqCache would also clear
-    // the flat-PQ books measured above — the per-artifact
-    // clearIvfpqModelCache keeps them warm, the contract the matrix pq
-    // rows rely on.
+    // basis on this failure path). Only "ivfpqmodel" is cleared, not
+    // the flat-PQ books measured above — they stay warm, the contract
+    // the matrix pq rows rely on.
     val ivfpqModelLifecycle: Seq[(String, Double)] =
       try {
-        val bIvfpq = timedN({
-          graft.operators.Clustering.clearFitCache()
-          graft.operators.Similarity.clearIvfpqModelCache()
-        })(graft.operators.Similarity.ivfpqModel(spark, sfDir))
+        val bIvfpq = timedN(Artifacts.clear("kmeans", "kmeansfixed", "ivfpqmodel"))(
+          graft.operators.Similarity.ivfpqModel(spark, sfDir))
         val sIvfpq = timedN(())(force(SparkEntry.queries("q_simsearch_ivfpq")(spark, sfDir)))
         Seq("ivfpq_build_sec" -> bIvfpq, "ivfpq_search_sec" -> sIvfpq) ++
           recall("q_simsearch_ivfpq")
@@ -289,7 +255,7 @@ object Bench {
     // actually pays).
     val ivfpqIndexLifecycle: Seq[(String, Double)] =
       try {
-        val bIvfpqIdx = timedN(graft.operators.Similarity.clearIvfpqIndexCache())(
+        val bIvfpqIdx = timedN(Artifacts.clear("ivfpq_index"))(
           graft.operators.Similarity.stagedIvfpqIndex(spark, sfDir))
         val sIvfpqIdx = timedN(())(force(SparkEntry.queries("q_simsearch_ivfpq_indexed")(spark, sfDir)))
         Seq("ivfpq_index_build_sec" -> bIvfpqIdx,
@@ -306,7 +272,7 @@ object Bench {
     // serve path).
     val ivfpqAppendLifecycle: Seq[(String, Double)] =
       try {
-        val bApp = timedN(graft.operators.Similarity.clearIvfpqAppendCache())(
+        val bApp = timedN(Artifacts.clear("ivfpq_index_inc"))(
           graft.operators.Similarity.stagedAppendedIvfpqIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_ivfpq_append")(spark, sfDir)))
         Seq("ivfpq_append_build_sec" -> bApp, "ivfpq_append_search_sec" -> sApp)
@@ -321,10 +287,10 @@ object Bench {
     // candidate scoring (no corpus signature pass — the staging win).
     val lshLifecycle: Seq[(String, Double)] =
       try {
-        val bIdx = timedN(graft.operators.Similarity.clearLshIndexCache())(
+        val bIdx = timedN(Artifacts.clear("lsh_index"))(
           graft.operators.Similarity.stagedLshIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_simsearch_lsh_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.Similarity.clearLshAppendCache())(
+        val bApp = timedN(Artifacts.clear("lsh_index_inc"))(
           graft.operators.Similarity.stagedAppendedLshIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_lsh_append")(spark, sfDir)))
         Seq("lsh_index_build_sec" -> bIdx, "lsh_index_search_sec" -> sIdx,
@@ -342,10 +308,10 @@ object Bench {
     // pq/sq/lsh rows guard theirs.
     val bqLifecycle: Seq[(String, Double)] =
       try {
-        val bIdx = timedN(graft.operators.Similarity.clearBqIndexCache())(
+        val bIdx = timedN(Artifacts.clear("bq_index"))(
           graft.operators.Similarity.stagedBqIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_simsearch_bq_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.Similarity.clearBqAppendCache())(
+        val bApp = timedN(Artifacts.clear("bq_index_inc"))(
           graft.operators.Similarity.stagedAppendedBqIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_simsearch_bq_append")(spark, sfDir)))
         Seq("bq_index_build_sec" -> bIdx, "bq_index_search_sec" -> sIdx,
@@ -362,16 +328,16 @@ object Bench {
     // fingerprint pass, no documents scan — the staging win).
     val winnowLifecycle: Seq[(String, Double)] =
       try {
-        val bIdx = timedN(graft.operators.TextOps.clearWinnowIndexCache())(
+        val bIdx = timedN(Artifacts.clear("winnowidx"))(
           graft.operators.TextOps.stagedWinnowIndex(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_winnow_dups_indexed")(spark, sfDir)))
-        val bApp = timedN(graft.operators.TextOps.clearWinnowAppendCache())(
+        val bApp = timedN(Artifacts.clear("winnowinc"))(
           graft.operators.TextOps.stagedAppendedWinnowIndex(spark, sfDir))
         val sApp = timedN(())(force(SparkEntry.queries("q_winnow_dups_append")(spark, sfDir)))
         // stats-grain serve (VERDICT r12 #4): per-doc coverage from the
         // warm artifact + the doc-length sidecar — the ≤~10 s answer to
         // "how duplicated is each doc" beside the pair-mass-bound serve
-        val bLen = timedN(graft.operators.TextOps.clearDocCharLenCache())(
+        val bLen = timedN(Artifacts.clear("doccharlen"))(
           graft.operators.TextOps.stagedDocCharLens(spark, sfDir))
         val sStats = timedN(())(force(SparkEntry.queries("q_winnow_stats_indexed")(spark, sfDir)))
         Seq("winnow_index_build_sec" -> bIdx, "winnow_index_search_sec" -> sIdx,
@@ -390,10 +356,8 @@ object Bench {
     // matrix row below measures the incremental path, not staging.
     val dedupLifecycle: Seq[(String, Double)] =
       try {
-        val bBand = timedN({
-          graft.operators.Dedup.clearBandIndexCache()
-          graft.operators.Dedup.clearComponentCache()
-        })(graft.operators.Dedup.stagedBandIndex(spark, sfDir))
+        val bBand = timedN(Artifacts.clear("bandidx", "dedupcc"))(
+          graft.operators.Dedup.stagedBandIndex(spark, sfDir))
         val sInc = timedN(())(force(SparkEntry.queries("q_dedup_append")(spark, sfDir)))
         Seq("dedup_append_build_sec" -> bBand, "dedup_append_inc_sec" -> sInc)
       } catch { case NonFatal(e) =>
@@ -409,7 +373,7 @@ object Bench {
     // ledger algebra).
     val webLifecycle: Seq[(String, Double)] =
       try {
-        val bWeb = timedN(graft.operators.Pipeline.clearWebStateCache())(
+        val bWeb = timedN(Artifacts.clear("webstate"))(
           graft.operators.Pipeline.stagedWebState(spark, sfDir))
         val sWeb = timedN(())(
           force(SparkEntry.queries("q_pipeline_web_append")(spark, sfDir)))
@@ -424,13 +388,13 @@ object Bench {
     // billed once, like an ANN index build (dupComponents ends in an
     // eager lineage cut, so the call IS the materialization); serve =
     // the q_dedup_cc consumer row over the warm closure. The memo is
-    // left warm and matrix reruns no longer clear it (it moved to
-    // clearIndexMemos), so the four consumer rows (cc/stats/keep_best/
+    // left warm and matrix reruns do not clear it (it is an Index
+    // artifact), so the four consumer rows (cc/stats/keep_best/
     // split_leakage) bill serve cost regardless of matrix ordering —
     // the r11 "keep_best rides its alphabetical predecessor" artifact.
     val dedupCcLifecycle: Seq[(String, Double)] =
       try {
-        val bCc = timedN(graft.operators.Dedup.clearComponentCache())(
+        val bCc = timedN(Artifacts.clear("dedupcc"))(
           graft.operators.Dedup.dupComponents(spark, sfDir))
         val sCc = timedN(())(force(SparkEntry.queries("q_dedup_cc")(spark, sfDir)))
         Seq("dedup_cc_build_sec" -> bCc, "dedup_cc_serve_sec" -> sCc)
@@ -446,7 +410,7 @@ object Bench {
     // matrix row, same contract as the other staged artifacts.
     val incrLifecycle: Seq[(String, Double)] =
       try {
-        val bState = timedN(graft.operators.Incremental.clearAggStateCache())(
+        val bState = timedN(Artifacts.clear("aggstate"))(
           graft.operators.Incremental.stagedAggState(spark, sfDir))
         val sMerge = timedN(())(force(SparkEntry.queries("q_incr_agg")(spark, sfDir)))
         Seq("incr_agg_build_sec" -> bState, "incr_agg_merge_sec" -> sMerge)
@@ -462,7 +426,7 @@ object Bench {
     // per-query pruned lookup.
     val idxLifecycle: Seq[(String, Double)] =
       (try {
-        val bIdx = timedN(graft.operators.Incremental.clearIndexStateCache())(
+        val bIdx = timedN(Artifacts.clear("idxstate"))(
           graft.operators.Incremental.stagedIndexState(spark, sfDir))
         val sIdx = timedN(())(force(SparkEntry.queries("q_incr_inverted")(spark, sfDir)))
         Seq("incr_idx_build_sec" -> bIdx, "incr_idx_merge_sec" -> sIdx)
@@ -470,7 +434,7 @@ object Bench {
         System.err.println(s"[bench] incr-index lifecycle split failed: ${e.getMessage}")
         Seq.empty
       }) ++ (try {
-        val bPost = timedN(graft.operators.TextOps.clearPostingsCache())(
+        val bPost = timedN(Artifacts.clear("postings"))(
           graft.operators.TextOps.stagedPostings(spark, sfDir))
         val sLook = timedN(())(force(SparkEntry.queries("q_index_lookup")(spark, sfDir)))
         Seq("postings_build_sec" -> bPost, "index_lookup_sec" -> sLook)
@@ -488,7 +452,7 @@ object Bench {
     // early-exit round counts, VERDICT r12 #5).
     val graphLifecycle: Seq[(String, Double)] =
       try {
-        val bG = timedN(graft.operators.GraphIndex.clearGraphCache())(
+        val bG = timedN(Artifacts.clear("graph"))(
           graft.operators.GraphIndex.stagedGraph(spark, sfDir))
         val sWp = timedN(())(force(SparkEntry.queries("q_walk_pairs")(spark, sfDir)))
         val sKc = timedN(())(force(SparkEntry.queries("q_kcore")(spark, sfDir)))
@@ -542,15 +506,15 @@ object Bench {
     // stall from a regression (r6's q_stream_typecounts 3.4→11.6 s was
     // a stall). Any row whose single run exceeds the threshold is run
     // once more and the MINIMUM reported — cheap (only slow rows pay)
-    // and exactly the rows where a stall misleads. The product memos
+    // and exactly the rows where a stall misleads. The Model artifacts
     // are CLEARED before the rerun (ADVICE r7): without that, a
     // memoized row's rerun is a cache hit and min() reports cache-hit
     // time, masking real regressions in q_dedup_cc/q_kmeans/ivf rows.
     // With the model-memo clear, both runs are genuine computations: a
     // memo-warm first run stays the row's (documented,
     // first-consumer-pays) basis via min(); a memo-cold stalled first
-    // run gets an honest cold rerun. Staged indices stay warm (see
-    // clearIndexMemos): an index-consumer row keeps measuring the
+    // run gets an honest cold rerun. Index artifacts stay warm (see
+    // the kinds above): an index-consumer row keeps measuring the
     // consumer path, with the build billed by the lifecycle split.
     // Cost: later rows that would have ridden a cleared model memo
     // re-pay it once — bounded by one extra build per rerun.
@@ -565,7 +529,7 @@ object Bench {
           val t1 = once()
           val t = if (t1 > RerunThresholdSec) {
             mReruns += 1
-            clearModelMemos()
+            Artifacts.clear(Artifacts.Model)
             math.min(t1, once())
           } else t1
           name -> t

@@ -145,14 +145,6 @@ object Engine {
 
   def configure(b: SparkSession.Builder, cpus: String): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cpus)
-      // shuffle/spill block codec (guide §2.3: "no universal answer —
-      // measure"). Parameterised so the array-heavy shuffles (node2vec
-      // walk state) can be A/B'd without a code change. The default is
-      // lz4, Spark's own default; no codec A/B is recorded (the r16
-      // ledger names this knob but holds no measurement of it). At
-      // 100 TB on a thinner network, measure with the same env knob.
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_IO_CODEC", "lz4"))
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
@@ -196,79 +188,31 @@ object Engine {
       .config("spark.hadoop.fs.file.impl", classOf[ForkFreeLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[ForkFreeLocalFs].getName)
 
-  /** Standard local session for mains and tests. Scratch space (shuffle
-    * spills, streaming checkpoints) goes to tmpfs when available. The
-    * disk is not what streaming commits wait on: on a 4-core host with
-    * an ext4 virtio disk, q_stream_tumbling at sf0.1 took the same time
-    * with scratch on disk and on /dev/shm, both with Hadoop's stock
-    * local filesystem and with the fork-free one. The per-batch cost of
-    * checkpoint, state-store and sink commits was a `chmod`/`readlink`
-    * process per local-filesystem call, which `configure`'s fork-free
-    * `file:` filesystem removes.
-    *
-    * Guard rails (a RAM-backed spill dir must not eat the heap's lunch):
-    *  - opt-out via SPARK_GRAFT_TMPFS=0;
-    *  - only used when /dev/shm has ≥ 16 GiB usable — a larger-than-
-    *    memory run falls back to disk spill rather than exhausting RAM;
-    *  - scoped per-process (graft-tmp-<pid>) and removed by a shutdown
-    *    hook; stale dirs of dead processes are swept at startup. The
-    *    JVM-global `java.io.tmpdir` is NOT mutated — streaming
-    *    checkpoints get an explicit `spark.sql.streaming
-    *    .checkpointLocation` instead. */
+  /** Standard local session for mains and tests. Spills and streaming
+    * checkpoints go to Spark's defaults (`SPARK_LOCAL_DIRS`,
+    * `java.io.tmpdir`). The disk is not what streaming commits wait on:
+    * on a 4-core host with an ext4 virtio disk, the bench headline took
+    * the same time with scratch on disk and on /dev/shm. The per-batch
+    * cost of checkpoint, state-store and sink commits was a
+    * `chmod`/`readlink` process per local-filesystem call, which
+    * `configure`'s fork-free `file:` filesystem removes. */
   def session(cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")): SparkSession = {
-    val builder = SparkSession.builder().master(s"local[$cpus]")
-    scratchDir().foreach { dir =>
-      builder.config("spark.local.dir", dir.getAbsolutePath)
-      builder.config("spark.sql.streaming.checkpointLocation",
-        new java.io.File(dir, "ckpt").getAbsolutePath)
-    }
-    val spark = configure(builder, cpus).getOrCreate()
+    val spark = configure(SparkSession.builder().master(s"local[$cpus]"), cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
   }
 
-  /** Unique scratch subdirectory (tmpfs when available, else the system
-    * temp dir), removed by a shutdown hook — harness working space for
-    * streaming sinks/checkpoints and staged inputs. */
-  def workDir(prefix: String): java.io.File = {
-    val dir = scratchDir() match {
-      case Some(root) =>
-        java.nio.file.Files.createTempDirectory(root.toPath, prefix).toFile
-      case None =>
-        java.nio.file.Files.createTempDirectory(prefix).toFile
-    }
-    Runtime.getRuntime.addShutdownHook(new Thread(() => Fs.rmRf(dir)))
-    dir
+  /** One scratch root per JVM under `java.io.tmpdir`, removed by a
+    * single shutdown hook. */
+  private lazy val scratchRoot: java.io.File = {
+    val root = java.nio.file.Files.createTempDirectory("graft-").toFile
+    Runtime.getRuntime.addShutdownHook(new Thread(() => Fs.rmRf(root)))
+    root
   }
 
-  private val MinTmpfsBytes = 16L * 1024 * 1024 * 1024
-
-  @volatile private var scratch: Option[java.io.File] = None
-
-  /** Per-process tmpfs scratch dir, or None when disabled/too small. */
-  private def scratchDir(): Option[java.io.File] = synchronized {
-    if (scratch.isDefined) scratch
-    else {
-      val shm = new java.io.File("/dev/shm")
-      val enabled = sys.env.getOrElse("SPARK_GRAFT_TMPFS", "1") != "0"
-      if (!enabled || !shm.isDirectory || shm.getUsableSpace < MinTmpfsBytes) None
-      else {
-        // sweep scratch left by dead JVMs (driver runs many rounds)
-        Option(shm.listFiles()).getOrElse(Array.empty)
-          .filter(_.getName.startsWith("graft-tmp")).foreach { old =>
-            val pid = old.getName.stripPrefix("graft-tmp-")
-            val alive = pid.toLongOption
-              .exists(p => ProcessHandle.of(p).isPresent)
-            if (!alive) Fs.rmRf(old)
-          }
-        val dir = new java.io.File(shm,
-          s"graft-tmp-${ProcessHandle.current().pid()}")
-        if (dir.isDirectory || dir.mkdirs()) {
-          Runtime.getRuntime.addShutdownHook(new Thread(() => Fs.rmRf(dir)))
-          scratch = Some(dir)
-        }
-        scratch
-      }
-    }
-  }
+  /** Fresh scratch subdirectory of this JVM's scratch root — working
+    * space for staged artifacts, streaming sinks and checkpoints, and
+    * staged inputs. Removed when the JVM exits. */
+  def workDir(prefix: String): java.io.File =
+    java.nio.file.Files.createTempDirectory(scratchRoot.toPath, prefix).toFile
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.Artifacts
 import graft.sources.Tables
 
 /** K-Means clustering over `embeddings` (SURVEY §2 B21) — the proper
@@ -56,12 +57,6 @@ object Clustering {
   /** Lloyd's K-Means driver loop: returns the fitted centroids (k·64
     * doubles of driver state — constant in corpus size). Also the coarse
     * quantizer for `Similarity.ivfTopK`. */
-  private val fitCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int, String), Array[Array[Double]]]()
-
-  /** Drop all memoized fits (bench steady-state timing / data-swap hook). */
-  def clearFitCache(): Unit = { fitCache.clear(); fitFixedCache.clear() }
-
   def fit(spark: SparkSession, dir: String, iters: Int = Iters,
           k: Int = K): Array[Array[Double]] =
     // deterministic per (dir, iters, k, data fingerprint) → safe to
@@ -69,7 +64,7 @@ object Clustering {
     // q_simsearch_ivf and the blocked embed-dedup (3× the most expensive
     // driver loop). The memo goes stale when the table is regenerated in
     // place (Fs fingerprint).
-    fitCache.getOrElseUpdate((dir, iters, k, graft.Fs.tableFingerprint(dir, "embeddings")),
+    Artifacts.memo(Artifacts.Model, "kmeans", dir, "embeddings", iters, k)(
       fit(vecs(spark, dir), iters, k))
 
   /** df form: expects (vec_id: Long, e: Array[Double]); not memoized. */
@@ -156,15 +151,12 @@ object Clustering {
   private def roundDiv(s: Long, n: Long): Long =
     if (s >= 0) (2 * s + n) / (2 * n) else -((2 * -s + n) / (2 * n))
 
-  private val fitFixedCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int, String), Array[Array[Long]]]()
-
   /** Fixed-point Lloyd's fit: same init (k lowest vec_ids), same
     * tie-break (lower cid), same empty-cluster rule (carry the previous
     * centroid) as the double loop — but exact at every step. */
   def fitFixed(spark: SparkSession, dir: String, iters: Int = Iters,
                k: Int = K): Array[Array[Long]] =
-    fitFixedCache.getOrElseUpdate((dir, iters, k, graft.Fs.tableFingerprint(dir, "embeddings")),
+    Artifacts.memo(Artifacts.Model, "kmeansfixed", dir, "embeddings", iters, k)(
       fitFixed(qvecs(spark, dir), iters, k))
 
   /** df form: expects (vec_id: Long, e: Array[Long] micro-units); not
@@ -280,12 +272,9 @@ object Clustering {
   /** Power-iteration rounds (same count as the Lloyd loop). */
   val PcaIters = 8
 
-  private val pcaCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), Array[Long]]()
-
   def pcaPowerFixed(spark: SparkSession, dir: String,
                     iters: Int = PcaIters): Array[Long] =
-    pcaCache.getOrElseUpdate((dir, iters, graft.Fs.tableFingerprint(dir, "embeddings")),
+    Artifacts.memo(Artifacts.Model, "pca", dir, "embeddings", iters)(
       pcaPowerFixed(qvecs(spark, dir), iters))
 
   /** df form: expects (vec_id, e: Array[Long] micro-units). Driver
@@ -381,12 +370,9 @@ object Clustering {
       }: _*).as("e"))
   }
 
-  private val pcaDeflateCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), Array[Long]]()
-
   def pcaDeflateFixed(spark: SparkSession, dir: String,
                       iters: Int = PcaIters): Array[Long] =
-    pcaDeflateCache.getOrElseUpdate((dir, iters, graft.Fs.tableFingerprint(dir, "embeddings")),
+    Artifacts.memo(Artifacts.Model, "pcadeflate", dir, "embeddings", iters)(
       pcaPowerFixed(pcaDeflatedVecs(qvecs(spark, dir),
         pcaPowerFixed(spark, dir, iters)), iters))
 
@@ -403,9 +389,6 @@ object Clustering {
   /** Components returned by [[pcaTopK]]. */
   val PcaK = 3
 
-  private val pcaTopKCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, Int, String), Array[Array[Long]]]()
-
   /** q_pca_topk: the deflation step LOOPED — the top-k principal
     * directions by chain → deflate → chain → deflate → chain. Each
     * deflation is the exact-integer projection removal of
@@ -418,7 +401,7 @@ object Clustering {
     * bounded multi-component model artifact. */
   def pcaTopKFixed(spark: SparkSession, dir: String, k: Int = PcaK,
                    iters: Int = PcaIters): Array[Array[Long]] =
-    pcaTopKCache.getOrElseUpdate((dir, k, iters, graft.Fs.tableFingerprint(dir, "embeddings")), {
+    Artifacts.memo(Artifacts.Model, "pcatopk", dir, "embeddings", k, iters) {
       val comps = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
       var vs = qvecs(spark, dir)
       for (c <- 0 until k) {
@@ -427,7 +410,7 @@ object Clustering {
         if (c < k - 1) vs = pcaDeflatedVecs(vs, cc)
       }
       comps.toArray
-    })
+    }
 
   def pcaTopK(spark: SparkSession, dir: String): DataFrame = {
     val cs = pcaTopKFixed(spark, dir)

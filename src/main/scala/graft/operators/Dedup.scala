@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.Artifacts
 import graft.sources.Tables
 
 /** Deduplication suite over `documents` / `embeddings` (SURVEY §2
@@ -791,13 +792,8 @@ object Dedup {
     * cached blocks, not the propagation loop. Session-scoped (the
     * backing blocks die with the SparkContext); cleared by the bench
     * between timed runs. */
-  private val compCache =
-    new scala.collection.concurrent.TrieMap[(String, String), DataFrame]()
-
-  def clearComponentCache(): Unit = compCache.clear()
-
   def dupComponents(spark: SparkSession, dir: String): DataFrame =
-    compCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")),
+    Artifacts.memo(Artifacts.Index, "dedupcc", dir, "documents")(
       dupComponents(minhashLsh(Tables(spark, dir, "documents"))))
 
   // ---- incremental dedup of an appended batch (VERDICT r6 #5): the
@@ -829,11 +825,6 @@ object Dedup {
   // shingles), so per-batch verify cost is |candidate docs|-bound —
   // the append path never re-shingles the corpus (VERDICT r7 #1).
 
-  private val bandIdxCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long, Long)]()
-
-  def clearBandIndexCache(): Unit = bandIdxCache.clear()
-
   /** Staged base-corpus band index + SHINGLE index + verified base pair
     * list, memoized per (dir, data fingerprint); returns (root, cut,
     * deltaDocs). The base/batch split mirrors
@@ -844,8 +835,8 @@ object Dedup {
     * range-layout on doc_id gives every file/row-group tight min/max
     * stats, so at 100 TB the candidate semi-join reads only the index
     * slices holding candidate docs. */
-  private[graft] def stagedBandIndex(spark: SparkSession, dir: String): (String, Long, Long) =
-    bandIdxCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")), {
+  private[graft] def stagedBandIndex(spark: SparkSession, dir: String): (String, Long, Long) = {
+    val (root, (cut, deltaDocs)) = Artifacts.staged(Artifacts.Index, "bandidx", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -855,7 +846,6 @@ object Dedup {
       // (the Similarity.stagedAppendedIndex refresh-fraction fix, same
       // class); counted once here, carried in the staging metadata
       val baseRows = base.count()
-      val root = graft.Engine.workDir("graft-bandidx-").getAbsolutePath
       // three independent artifact writes — overlap them (guide §2.6)
       // so each job's task tail back-fills the others' idle cores;
       // dedicated drained pool per [[Staging.JobPool]]
@@ -876,8 +866,10 @@ object Dedup {
           pool.await()
         } finally pool.drainQuiet()
       }
-      (root, cut, n - baseRows)
-    })
+      (cut, n - baseRows)
+    }
+    (root, cut, deltaDocs)
+  }
 
   /** The batch probe: verified new pairs (delta×base ∪ delta×delta)
     * from the persisted band index — the plan the scale argument is

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.sources.Tables
 
 /** The co-purchase graph as an INDEX-CLASS staged artifact (VERDICT
@@ -96,14 +97,9 @@ object GraphIndex {
     * parallelism of every iterative serve). */
   val GraphBuckets = 32
 
-  private val cache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Unit)]()
-
-  def clearGraphCache(): Unit = cache.clear()
-
   /** Build (or reuse) the staged graph artifact; returns its root. */
   private[graft] def stagedGraph(spark: SparkSession, dir: String): String = {
-    val (root, _) = Staging.stage(cache, dir, "lineitem", "graft-graph-") { root =>
+    val (root, _) = Artifacts.staged(Artifacts.Index, "graph", dir, "lineitem") { root =>
       val li = Tables(spark, dir, "lineitem")
 
       // order→part distinct: basket grain, and the projection input

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.sources.Tables
 
 /** Incremental aggregate maintenance (q_incr_agg): a persisted
@@ -40,11 +41,6 @@ object Incremental {
     * expressed in event time as a warehouse rollup would). */
   val DeltaDays = 90
 
-  private val stateCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, java.sql.Timestamp)]()
-
-  def clearAggStateCache(): Unit = stateCache.clear()
-
   /** The shared event-time cut over orders (max date − [[DeltaDays]]) —
     * stagedAggState, stagedTopkState and Relational.mergeUpsert must
     * use the SAME arrival convention, so it is defined once
@@ -58,12 +54,6 @@ object Incremental {
     org.apache.spark.sql.functions.udaf(
       new graft.functions.TopKByScore(k),
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[(Double, Long)]())
-
-  private def allCaches: Seq[scala.collection.concurrent.TrieMap[_, _]] =
-    Seq(stateCache, wcCache, idxCache, hllCache, topkCache, joinCache)
-
-  /** Clear every incremental state memo (bench rerun honesty). */
-  def clearAllStateCaches(): Unit = allCaches.foreach(_.clear())
 
   /** Monthly (month, o_orderstatus) partials over `df`: exact cent
     * sums + counts. ONE definition feeds state staging, the delta
@@ -83,7 +73,7 @@ object Incremental {
     * exactly the index-staging contract of the other incremental
     * operators. */
   private[graft] def stagedAggState(spark: SparkSession, dir: String): (String, java.sql.Timestamp) =
-    Staging.stage(stateCache, dir, "orders", "graft-aggstate-") { root =>
+    Artifacts.staged(Artifacts.Index, "aggstate", dir, "orders") { root =>
       val cut = ordersCut(spark, dir)
       partials(Tables(spark, dir, "orders").where(col("o_orderdate") < lit(cut)))
         .write.mode("overwrite").parquet(s"$root/state")
@@ -129,9 +119,6 @@ object Incremental {
   // appended docs' counts into persisted state. Same arrival cut as
   // the dedup/ANN incrementals (last ~10% of doc ids arrive late).
 
-  private val wcCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
   /** Word-count partials: q_wordcount's own aggregation body (shared
     * definition — TextOps.wordCountPartials — so the tokenizer cannot
     * drift between the incremental claim and the flagship count). */
@@ -141,7 +128,7 @@ object Incremental {
   /** Staged word-count state over the base docs (doc_id < cut),
     * memoized per (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedWordState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(wcCache, dir, "documents", "graft-wcstate-") { root =>
+    Artifacts.staged(Artifacts.Index, "wcstate", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -175,15 +162,10 @@ object Incremental {
   // a vocabulary-grain merge. At 100 TB: the index never rebuilds; a
   // crawl increment costs its own size.
 
-  private val idxCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearIndexStateCache(): Unit = idxCache.clear()
-
   /** Staged per-term index partials over the base docs (doc_id < cut),
     * memoized per (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedIndexState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(idxCache, dir, "documents", "graft-idxstate-") { root =>
+    Artifacts.staged(Artifacts.Index, "idxstate", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -242,9 +224,6 @@ object Incremental {
   // At 100 TB: a month's billions of orders never re-rank; a batch
   // costs its own scan + a groups-sized merge.
 
-  private val topkCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, java.sql.Timestamp)]()
-
   /** Per-month capped top-k partials over `df` — q_group_topk's
     * aggregation body (same aggregator, same k), minus the explode. */
   private def topkPartials(df: DataFrame, k: Int): DataFrame =
@@ -254,7 +233,7 @@ object Incremental {
   /** Staged top-k state over the base orders slice (same DeltaDays
     * event-time cut as the rollup state — [[ordersCut]]). */
   private[graft] def stagedTopkState(spark: SparkSession, dir: String): (String, java.sql.Timestamp) =
-    Staging.stage(topkCache, dir, "orders", "graft-topkstate-") { root =>
+    Artifacts.staged(Artifacts.Index, "topkstate", dir, "orders") { root =>
       val cut = ordersCut(spark, dir)
       topkPartials(Tables(spark, dir, "orders")
           .where(col("o_orderdate") < lit(cut)), TopkK)
@@ -297,15 +276,12 @@ object Incremental {
   // This is the 100 TB maintenance story for distinct counts: the
   // state is groups × 256 small ints at any corpus size.
 
-  private val hllCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
   /** Staged HLL register state over the base slice (l_orderkey below
     * the top-decile cut — the key-space arrival convention of the doc
     * incrementals, expressed on the lineitem fact), memoized per
     * (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedHllState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(hllCache, dir, "lineitem", "graft-hllstate-") { root =>
+    Artifacts.staged(Artifacts.Index, "hllstate", dir, "lineitem") { root =>
       val li = Tables(spark, dir, "lineitem")
       val maxKey = li.agg(max("l_orderkey")).head().getLong(0) // 1 driver row
       val cut = maxKey - math.max(1L, maxKey / 10)
@@ -357,9 +333,6 @@ object Incremental {
   // terms are non-empty and none can be elided by an arrival
   // convention.
 
-  private val joinCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, (java.sql.Timestamp, java.sql.Timestamp))]()
-
   /** Monthly revenue partials over any (orders-slice ⋈ lineitem-slice):
     * exact revenue cents per line (the pinned
     * round(price·(1−disc)·100) double chain both engines share) +
@@ -392,7 +365,7 @@ object Incremental {
     * before their cuts) — the one full join, paid once per corpus
     * version. */
   private[graft] def stagedJoinState(spark: SparkSession, dir: String): (String, (java.sql.Timestamp, java.sql.Timestamp)) =
-    Staging.stage(joinCache, dir, "orders", "graft-joinstate-") { root =>
+    Artifacts.staged(Artifacts.Index, "joinstate", dir, "orders") { root =>
       val cutO = Relational.ordersDeltaCut(spark, dir)
       val cutL = lineitemDeltaCut(spark, dir)
       val baseO = ordCols(Tables(spark, dir, "orders")

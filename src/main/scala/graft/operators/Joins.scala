@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.Artifacts
 import graft.sources.Tables
 
 /** Join surface (SURVEY §2 B7–B10 + as-of).
@@ -312,9 +313,6 @@ object Joins {
       .select(col("id"), coalesce(col("comp"), col("id")).as("canon"))
   }
 
-  private val bucketCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, String)]()
-
   /** Bucket count for the staged co-located join tables. Local default
     * 8 (env SPARK_GRAFT_BUCKETS); at 100 TB size so one bucket ≈ one
     * task's worth of data (~128-256 MiB post-compression — e.g. a
@@ -333,7 +331,7 @@ object Joins {
   private[graft] def stagedBuckets(spark: SparkSession, dir: String): (String, String) = {
     val fp = graft.Fs.tableFingerprint(dir, "orders") + "|" +
       graft.Fs.tableFingerprint(dir, "customer")
-    bucketCache.getOrElseUpdate((dir, fp), {
+    Artifacts.memo(Artifacts.Input, "buckets", dir, "orders", fp) {
       val tag = Integer.toHexString((dir + fp).hashCode)
       val root = graft.Engine.workDir("graft-bkt-")
       def stage(table: String, cols: Seq[String], key: String): String = {
@@ -353,7 +351,7 @@ object Joins {
       }
       (stage("orders", Seq("o_orderkey", "o_custkey", "o_totalprice"), "o_custkey"),
         stage("customer", Seq("c_custkey", "c_mktsegment"), "c_custkey"))
-    })
+    }
   }
 
   /** As-of join (q_join_asof): for each event, the most recent order of

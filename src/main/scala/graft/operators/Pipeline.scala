@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.sources.Tables
 
 /** End-to-end training-data curation (the north-star composition):
@@ -714,11 +715,6 @@ object Pipeline {
   // base ∪ delta (spec-asserted; the oracle is webOracle verbatim —
   // the q_dedup_append convention).
 
-  private val webStateCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, (Long, Long))]()
-
-  def clearWebStateCache(): Unit = webStateCache.clear()
-
   /** The increment predicate: the latest crawl = the last
     * [[graft.sources.WebCorpus.DeltaSliceStart]]-onward web pages plus
     * the last ~10% of fixture docs (a real increment mixes good pages
@@ -734,7 +730,7 @@ object Pipeline {
   private[graft] def stagedWebState(spark: SparkSession,
       dir: String): (String, Long, Long) = {
     val (root, (fixtureCut, deltaDocs)) =
-      Staging.stage(webStateCache, dir, "documents", "graft-webstate-") { root =>
+      Artifacts.staged(Artifacts.Index, "webstate", dir, "documents") { root =>
         val corpus = graft.sources.WebCorpus.enriched(
           Tables(spark, dir, "documents"))
         val nFix = corpus

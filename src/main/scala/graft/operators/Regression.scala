@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.sources.Tables
 
 /** Fixed-point LINEAR REGRESSION via sufficient statistics — the
@@ -49,15 +50,10 @@ object Regression {
   private def roundDivB(s: BigInt, n: BigInt): BigInt =
     if (s >= 0) (2 * s + n) / (2 * n) else -((2 * -s + n) / (2 * n))
 
-  private val fitCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Array[Long]]()
-
-  def clearFitCache(): Unit = fitCache.clear()
-
   /** The fit: one aggregation pass → BigInt Cramer solve → 3 exact
     * micro-unit coefficients (β₀ + β₁·x1 + β₂·x2). */
   def fitFixed(spark: SparkSession, dir: String): Array[Long] =
-    fitCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")),
+    Artifacts.memo(Artifacts.Model, "linregfit", dir, "documents")(
       fitFixed(feats(Tables(spark, dir, "documents"))))
 
   /** The 9 normal-equation sums as one aggregated row — the
@@ -142,13 +138,10 @@ object Regression {
   // have, and it is exactly why large-scale pipelines keep linear
   // models' XᵀX/Xᵀy around instead of the fitted coefficients alone.
 
-  private val stateCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
   /** Base-slice sufficient statistics staged as a 1-row parquet;
     * returns (root, id cutoff). */
   private[graft] def stagedSumsState(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(stateCache, dir, "documents", "graft-linregstate-") { root =>
+    Artifacts.staged(Artifacts.Index, "linregstate", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.Artifacts
 import graft.sources.Tables
 
 /** Similarity search over `embeddings.embedding` (SURVEY §2 B20).
@@ -190,12 +191,9 @@ object Similarity {
   // correctly sized at sf0.001 and at 100 TB. The row count is one
   // parquet-metadata count, memoized per (dir, data fingerprint).
 
-  private val sizeCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Long]()
-
   /** Corpus cardinality of `embeddings` under `dir` (memoized). */
   def corpusSize(spark: SparkSession, dir: String): Long =
-    sizeCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")),
+    Artifacts.memo(Artifacts.Input, "corpussize", dir, "embeddings")(
       Tables(spark, dir, "embeddings").count())
 
   /** IVF list count ≈ √n (the standard inverted-file sizing: per-query
@@ -454,48 +452,16 @@ object Similarity {
   /** Memoized staged index, keyed (dir, data fingerprint): path of the
     * cid-partitioned corpus + the centroids that defined it (quantizer
     * state k·64 micro-unit longs — bounded driver memory). */
-  private val indexCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Array[Array[Long]])]()
-
-  /** Drop the memoized index metadata so the NEXT call re-stages.
-    * CONTRACT: materialize any previously returned indexed/appended
-    * search DataFrame before clearing — re-staging overwrites the
-    * stable root in place, so un-collected plans built against the old
-    * file listing would hit FileNotFoundException on evaluation. */
-  def clearIndexCache(): Unit = {
-    indexCache.clear(); appendCache.clear(); pqIndexCache.clear()
-    ivfpqIndexCache.clear(); ivfpqAppendCache.clear()
-  }
-
-  /** Drop the memoized PQ / IVFPQ models (codebooks + centroids) —
-    * model memos in the bench taxonomy (a warm hit would replace the
-    * fit compute), cleared wherever the K-Means fit cache is. */
-  def clearPqCache(): Unit = { pqCache.clear(); ivfpqCache.clear() }
-
-  /** Per-artifact clears for the bench's min-of-2 build timings
-    * (VERDICT r9 #1): each build metric cold-starts ONLY its own
-    * artifact — the aggregate [[clearIndexCache]] would also
-    * invalidate sibling indices already measured (and deliberately
-    * left warm for the matrix's consumer rows). */
-  def clearIvfIndexCache(): Unit = indexCache.clear()
-  def clearIvfAppendCache(): Unit = appendCache.clear()
-  def clearPqIndexCache(): Unit = pqIndexCache.clear()
-  def clearIvfpqModelCache(): Unit = ivfpqCache.clear()
-  def clearIvfpqIndexCache(): Unit = ivfpqIndexCache.clear()
-  def clearIvfpqAppendCache(): Unit = ivfpqAppendCache.clear()
-
   private[graft] def stagedIvfIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]]) =
-    indexCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+    Artifacts.staged(Artifacts.Index, "ivf_index", dir, "embeddings") { root =>
       val lists = ivfK(corpusSize(spark, dir))
       val cents = ivfCentsFixed(spark, dir, lists)
       val assigned = vecsQ(spark, dir)
         .withColumn("best", element_at(graft.functions.VectorExprs.nearestLists(col("eq"), cents, 1), 1))
         .withColumn("cid", col("best.cid")).drop("best", "eq")
-      val root = new java.io.File(stableRoot(dir), "ivf_index")
-      graft.sources.Sinks.writePartitioned(
-        assigned, root.getAbsolutePath, Seq("cid"), Seq("vec_id"))
-      (root.getAbsolutePath, cents)
-    })
+      graft.sources.Sinks.writePartitioned(assigned, root, Seq("cid"), Seq("vec_id"))
+      cents
+    }
 
   /** North-star q_simsearch_ivf_indexed: IVF search over the PERSISTED
     * index. Identical search semantics to `ivfTopK` (same memoized
@@ -596,11 +562,8 @@ object Similarity {
     appendedRows.toDouble / math.max(1L, baseRows + appendedRows).toDouble >
       AppendRefreshFraction
 
-  private val appendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Array[Array[Long]])]()
-
   private[graft] def stagedAppendedIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]]) =
-    appendCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+    Artifacts.staged(Artifacts.Index, "ivf_index_inc", dir, "embeddings") { root =>
       val n = corpusSize(spark, dir)
       val cut = n - math.max(1L, n / 10) // last ~10% of IDS arrive "late"
       val v = vecsQ(spark, dir)
@@ -626,24 +589,12 @@ object Similarity {
       def assigned(df: DataFrame): DataFrame = df
         .withColumn("best", element_at(graft.functions.VectorExprs.nearestLists(col("eq"), cents, 1), 1))
         .withColumn("cid", col("best.cid")).drop("best", "eq")
-      val root = new java.io.File(stableRoot(dir), "ivf_index_inc")
       graft.sources.Sinks.writePartitioned(
-        assigned(v.where(col("vec_id") < cut)),
-        root.getAbsolutePath, Seq("cid"), Seq("vec_id"))
+        assigned(v.where(col("vec_id") < cut)), root, Seq("cid"), Seq("vec_id"))
       graft.sources.Sinks.appendPartitioned(
-        assigned(v.where(col("vec_id") >= cut)),
-        root.getAbsolutePath, Seq("cid"), Seq("vec_id"))
-      (root.getAbsolutePath, cents)
-    })
-
-  /** One staging root per (dir, fingerprint), SURVIVING cache clears:
-    * re-staging overwrites in place instead of accumulating a fresh
-    * full-corpus copy (and shutdown hook) per bench run. */
-  private val rootCache =
-    new scala.collection.concurrent.TrieMap[(String, String), java.io.File]()
-  private def stableRoot(dir: String): java.io.File =
-    rootCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")),
-      graft.Engine.workDir("graft-ivf-"))
+        assigned(v.where(col("vec_id") >= cut)), root, Seq("cid"), Seq("vec_id"))
+      cents
+    }
 
   /** North-star q_simsearch_lsh: approximate top-k via multi-table
     * hyperplane LSH — [[lshTables]] independent tables (OR-construction)
@@ -702,13 +653,6 @@ object Similarity {
   def lshBucketGroups(n: Long): Int =
     math.max(8, math.min(LshBucketGroupsMax, (n / 16384L).toInt))
 
-  private val lshIndexCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Int, Int)]()
-  private val lshAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Int, Int)]()
-  def clearLshIndexCache(): Unit = lshIndexCache.clear()
-  def clearLshAppendCache(): Unit = lshAppendCache.clear()
-
   /** The slim index rows: (vec_id, t, bucket, bgrp) via the SAME
     * codegen sign-bit expression the live search uses — one source, so
     * staged buckets cannot drift from live buckets. */
@@ -718,16 +662,17 @@ object Similarity {
       .select(col("vec_id"), posexplode(col("buckets")).as(Seq("t", "bucket")))
       .withColumn("bgrp", pmod(col("bucket"), lit(groups)))
 
-  private[graft] def stagedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) =
-    lshIndexCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+  private[graft] def stagedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) = {
+    val (root, (np, nt)) = Artifacts.staged(Artifacts.Index, "lsh_index", dir, "embeddings") { root =>
       val n = corpusSize(spark, dir)
       val (np, nt) = (lshPlanes(n), lshTables(n))
-      val root = new java.io.File(stableRoot(dir), "lsh_index")
       graft.sources.Sinks.writePartitioned(
         lshIndexRows(vecs(spark, dir), np, nt, lshBucketGroups(n)),
-        root.getAbsolutePath, Seq("t", "bgrp"), Seq("vec_id"))
-      (root.getAbsolutePath, np, nt)
-    })
+        root, Seq("t", "bgrp"), Seq("vec_id"))
+      (np, nt)
+    }
+    (root, np, nt)
+  }
 
   /** Base staged once, the late decile's rows appended into the same
     * (t, bgrp) dirs, then the touched dirs COMPACTED in one job
@@ -738,23 +683,23 @@ object Similarity {
     * artifact has absorbed. Plane count sizes from the FULL corpus
     * count (the ivfK convention) so base and delta hash under
     * identical geometry. */
-  private[graft] def stagedAppendedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) =
-    lshAppendCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+  private[graft] def stagedAppendedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) = {
+    val (root, (np, nt)) = Artifacts.staged(Artifacts.Index, "lsh_index_inc", dir, "embeddings") { root =>
       val n = corpusSize(spark, dir)
       val cut = n - math.max(1L, n / 10)
       val (np, nt) = (lshPlanes(n), lshTables(n))
       val v = vecs(spark, dir)
-      val root = new java.io.File(stableRoot(dir), "lsh_index_inc")
       graft.sources.Sinks.writePartitioned(
         lshIndexRows(v.where(col("vec_id") < cut), np, nt, lshBucketGroups(n)),
-        root.getAbsolutePath, Seq("t", "bgrp"), Seq("vec_id"))
+        root, Seq("t", "bgrp"), Seq("vec_id"))
       graft.sources.Sinks.appendPartitioned(
         lshIndexRows(v.where(col("vec_id") >= cut), np, nt, lshBucketGroups(n)),
-        root.getAbsolutePath, Seq("t", "bgrp"), Seq("vec_id"))
-      graft.sources.Sinks.compactPartitioned(spark, root.getAbsolutePath,
-        Seq("t", "bgrp"), Seq("vec_id"))
-      (root.getAbsolutePath, np, nt)
-    })
+        root, Seq("t", "bgrp"), Seq("vec_id"))
+      graft.sources.Sinks.compactPartitioned(spark, root, Seq("t", "bgrp"), Seq("vec_id"))
+      (np, nt)
+    }
+    (root, np, nt)
+  }
 
   /** North-star q_simsearch_lsh_indexed: the multi-table search served
     * from the persisted slim index — results ≡ live [[lshTopK]]
@@ -840,16 +785,13 @@ object Similarity {
   def pqShortlist(k: Int, n: Long): Long =
     math.max(pqShortlistFloor(k).toLong, n / 8L)
 
-  private val pqCache =
-    new scala.collection.concurrent.TrieMap[(String, String), Array[Array[Array[Long]]]]()
-
   /** Per-subspace fixed-point codebooks [subspace][code][dim], memoized
     * per (dir, data fingerprint). Each fit is `Clustering.fitFixed` on
     * the micro-unit subvectors — deterministic init (first PqK corpus
     * vectors), integer Lloyd, so the codebooks are bit-reproducible in
     * any engine (the q_kmeans / IVF convention). */
   private[graft] def pqCodebooks(spark: SparkSession, dir: String): Array[Array[Array[Long]]] =
-    pqCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")),
+    Artifacts.memo(Artifacts.Model, "pqbooks", dir, "embeddings")(
       fitSubspaceBooks(vecsQ(spark, dir).select(col("vec_id"), col("eq")), "eq"))
 
   /** Fit the [[PqM]] subspace codebooks CONCURRENTLY — each fit is an
@@ -954,9 +896,6 @@ object Similarity {
       .where(col("rn") <= k)
   }
 
-  private val pqIndexCache = new scala.collection.concurrent.TrieMap[
-    (String, String), (String, Array[Array[Array[Long]]])]()
-
   /** Staged PQ index: the corpus encoded ONCE into its (vec_id, codes)
     * table — 8 small ints per vector, the compact artifact a real
     * deployment persists and serves many searches from — plus the
@@ -965,16 +904,15 @@ object Similarity {
     * codes from codebooks). Sorted by vec_id so row-group stats stay
     * selective for id-ranged maintenance reads. */
   private[graft] def stagedPqIndex(spark: SparkSession, dir: String): (String, Array[Array[Array[Long]]]) =
-    pqIndexCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+    Artifacts.staged(Artifacts.Index, "pq_index", dir, "embeddings") { root =>
       val books = pqCodebooks(spark, dir)
       val enc = vecsQ(spark, dir)
         .select(col("vec_id"), pqCodesCol(books, "eq").as("codes"))
-      val root = new java.io.File(stableRoot(dir), "pq_index")
       enc.repartitionByRange(col("vec_id"))
         .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(root.getAbsolutePath)
-      (root.getAbsolutePath, books)
-    })
+        .write.mode("overwrite").parquet(root)
+      books
+    }
 
   /** q_simsearch_pq_indexed: PQ search over the persisted codes table —
     * encode-once/search-many. The scan touches ONLY the 8-small-ints
@@ -997,9 +935,6 @@ object Similarity {
 
   // ---- IVF + residual PQ (q_simsearch_ivfpq) ----
 
-  private val ivfpqCache = new scala.collection.concurrent.TrieMap[
-    (String, String), (Array[Array[Long]], Array[Array[Array[Long]]])]()
-
   /** Tiny centroid table (cid, cent) for broadcast residual joins —
     * quantizer state is K·64 longs, bounded driver memory. */
   private def centsDf(spark: SparkSession, cents: Array[Array[Long]]): DataFrame = {
@@ -1013,7 +948,7 @@ object Similarity {
     * more compressible than raw vectors (Jégou et al. §IV), and since
     * both terms are micro-unit longs the residual stays exact-integer. */
   private[graft] def ivfpqModel(spark: SparkSession, dir: String): (Array[Array[Long]], Array[Array[Array[Long]]]) =
-    ivfpqCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+    Artifacts.memo(Artifacts.Model, "ivfpqmodel", dir, "embeddings") {
       val cents = ivfCentsFixed(spark, dir, ivfK(corpusSize(spark, dir)))
       // localCheckpoint: the residual projection feeds 8 concurrent
       // codebook fits; without it each fit would re-run the assignment
@@ -1021,7 +956,7 @@ object Similarity {
       val resid = residuals(vecsQ(spark, dir), centsDf(spark, cents), cents)
         .select(col("vec_id"), col("rq")).localCheckpoint()
       (cents, fitSubspaceBooks(resid, "rq"))
-    })
+    }
 
   /** Attach the nearest-list cid and the exact-integer residual
     * `rq = eq − cent(cid)` to each vector of `v`. */
@@ -1069,9 +1004,6 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("cid").as("probe"),
         pqLutCol(books, "rq").as("lut"))
 
-  private val ivfpqIndexCache = new scala.collection.concurrent.TrieMap[
-    (String, String), (String, Array[Array[Long]], Array[Array[Array[Long]]])]()
-
   /** Staged IVFPQ index: the corpus encoded ONCE as (vec_id, codes)
     * rows laid out in `cid=…` partition directories — the artifact a
     * real deployment serves from (FAISS's IndexIVFPQ on disk). The
@@ -1084,16 +1016,16 @@ object Similarity {
     * per vector), full vectors only for the query batch + shortlist.
     * Centroids and codebooks are stored beside the path so a later
     * model-memo clear cannot desync codes from the model. */
-  private[graft] def stagedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) =
-    ivfpqIndexCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+  private[graft] def stagedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) = {
+    val (root, (cents, books)) = Artifacts.staged(Artifacts.Index, "ivfpq_index", dir, "embeddings") { root =>
       val (cents, books) = ivfpqModel(spark, dir)
       val enc = residuals(vecsQ(spark, dir), centsDf(spark, cents), cents)
         .select(col("vec_id"), col("cid"), pqCodesCol(books, "rq").as("codes"))
-      val root = new java.io.File(stableRoot(dir), "ivfpq_index")
-      graft.sources.Sinks.writePartitioned(
-        enc, root.getAbsolutePath, Seq("cid"), Seq("vec_id"))
-      (root.getAbsolutePath, cents, books)
-    })
+      graft.sources.Sinks.writePartitioned(enc, root, Seq("cid"), Seq("vec_id"))
+      (cents, books)
+    }
+    (root, cents, books)
+  }
 
   /** q_simsearch_ivfpq_indexed: IVFPQ search served from the persisted
     * codes index — the [[ivfTopKIndexed]] partition-pruning story
@@ -1132,9 +1064,6 @@ object Similarity {
     pqRerank(v, scored, k, corpusSize(spark, dir))
   }
 
-  private val ivfpqAppendCache = new scala.collection.concurrent.TrieMap[
-    (String, String), (String, Array[Array[Long]], Array[Array[Array[Long]]])]()
-
   /** INCREMENTAL IVFPQ index maintenance (the [[ivfTopKAppended]]
     * story composed with PQ): the whole model — coarse quantizer AND
     * residual codebooks — is trained on the BASE corpus only (the
@@ -1150,8 +1079,8 @@ object Similarity {
     * oracle replays the base-only fits. A batch past
     * [[AppendRefreshFraction]] takes the REBUILD path (fresh
     * full-corpus model), the [[stagedAppendedIndex]] convention. */
-  private[graft] def stagedAppendedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) =
-    ivfpqAppendCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+  private[graft] def stagedAppendedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) = {
+    val (root, (cents, books)) = Artifacts.staged(Artifacts.Index, "ivfpq_index_inc", dir, "embeddings") { root =>
       val n = corpusSize(spark, dir)
       val cut = n - math.max(1L, n / 10)
       val v = vecsQ(spark, dir)
@@ -1179,16 +1108,16 @@ object Similarity {
       val books = fitSubspaceBooks(resid.select(col("vec_id"), col("rq")), "rq")
       val fitEnc = resid
         .select(col("vec_id"), col("cid"), pqCodesCol(books, "rq").as("codes"))
-      val root = new java.io.File(stableRoot(dir), "ivfpq_index_inc")
-      graft.sources.Sinks.writePartitioned(
-        fitEnc, root.getAbsolutePath, Seq("cid"), Seq("vec_id"))
+      graft.sources.Sinks.writePartitioned(fitEnc, root, Seq("cid"), Seq("vec_id"))
       if (!refresh)
         graft.sources.Sinks.appendPartitioned(
           residuals(v.where(col("vec_id") >= cut), cdf, cents)
             .select(col("vec_id"), col("cid"), pqCodesCol(books, "rq").as("codes")),
-          root.getAbsolutePath, Seq("cid"), Seq("vec_id"))
-      (root.getAbsolutePath, cents, books)
-    })
+          root, Seq("cid"), Seq("vec_id"))
+      (cents, books)
+    }
+    (root, cents, books)
+  }
 
   /** q_simsearch_ivfpq_append: search over the incrementally
     * maintained IVFPQ index ([[stagedAppendedIvfpqIndex]]), served by
@@ -1230,15 +1159,11 @@ object Similarity {
   /** SQ8 quantization levels (codes 0..255). */
   val SqLevels = 255L
 
-  private val sqCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (Array[Long], Array[Long])]()
-  def clearSqCache(): Unit = sqCache.clear()
-
   /** The SQ "model": per-dimension (lo, width = max(1, hi−lo)) over
     * the micro-unit corpus — 2·dims longs of driver state from ONE
     * min/max scan, memoized per (dir, data fingerprint). */
   private[graft] def sqStats(spark: SparkSession, dir: String): (Array[Long], Array[Long]) =
-    sqCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")),
+    Artifacts.memo(Artifacts.Model, "sqstats", dir, "embeddings")(
       sqFit(vecsQ(spark, dir)))
 
   /** One min/max scan → the per-dim (lo, width) model. */
@@ -1379,13 +1304,6 @@ object Similarity {
     pqRerank(v, scored, k, n, isQuery)
   }
 
-  private val bqIndexCache =
-    new scala.collection.concurrent.TrieMap[(String, String), String]()
-  private val bqAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), String]()
-  def clearBqIndexCache(): Unit = bqIndexCache.clear()
-  def clearBqAppendCache(): Unit = bqAppendCache.clear()
-
   /** Staged BQ index: the corpus signatures persisted ONCE as the flat
     * (vec_id, s0..s{W−1}) table. A search computes signatures for the
     * QUERY batch only and Hamming-scans the slim artifact — the scan
@@ -1394,13 +1312,11 @@ object Similarity {
     * buckets, no recall knee — the simplest maintenance story in the
     * family). Sorted by vec_id for id-ranged maintenance reads. */
   private[graft] def stagedBqIndex(spark: SparkSession, dir: String): String =
-    bqIndexCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
-      val root = new java.io.File(stableRoot(dir), "bq_index")
+    Artifacts.staged(Artifacts.Index, "bq_index", dir, "embeddings") { root =>
       bqSigRows(vecs(spark, dir))
         .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(root.getAbsolutePath)
-      root.getAbsolutePath
-    })
+        .write.mode("overwrite").parquet(root)
+    }._1
 
   /** Append-maintained BQ index: base staged over the early ids, the
     * late decile's signatures appended as one delta file, the flat dir
@@ -1409,21 +1325,18 @@ object Similarity {
     * rows ⇒ appended searches ≡ live full-corpus searches bit-for-bit
     * — the LSH argument, without even a plane pool. */
   private[graft] def stagedAppendedBqIndex(spark: SparkSession, dir: String): String =
-    bqAppendCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "embeddings")), {
+    Artifacts.staged(Artifacts.Index, "bq_index_inc", dir, "embeddings") { root =>
       val n = corpusSize(spark, dir)
       val cut = n - math.max(1L, n / 10)
       val v = vecs(spark, dir)
-      val root = new java.io.File(stableRoot(dir), "bq_index_inc")
-      graft.Fs.rmRf(root)
       bqSigRows(v.where(col("vec_id") < cut))
         .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(root.getAbsolutePath)
+        .write.mode("overwrite").parquet(root)
       bqSigRows(v.where(col("vec_id") >= cut))
         .coalesce(1).sortWithinPartitions("vec_id")
-        .write.mode("append").parquet(root.getAbsolutePath)
-      graft.sources.Sinks.compact(spark, root.getAbsolutePath)
-      root.getAbsolutePath
-    })
+        .write.mode("append").parquet(root)
+      graft.sources.Sinks.compact(spark, root)
+    }._1
 
   /** q_simsearch_bq_indexed: served from the persisted signature table
     * — ≡ live [[bqTopK]] bit-for-bit (integer words round-trip parquet
@@ -1594,11 +1507,6 @@ object Similarity {
     * vec_id) order is total, so top-5 IS rows rn ≤ 5 of top-10). */
   val KnnStageK = 10
 
-  private val knnCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Unit)]()
-
-  def clearKnnCache(): Unit = knnCache.clear()
-
   /** The exact kNN top-[[KnnStageK]] edge list staged as a parquet
     * artifact, memoized per (dir, data fingerprint) — the kNN GRAPH as
     * a standing table, which is how a 100 TB corpus serves it: the
@@ -1608,7 +1516,7 @@ object Similarity {
     * confusion, link prediction) read bounded n·k rows instead of each
     * re-running the join. */
   private[operators] def stagedKnn(spark: SparkSession, dir: String): String = {
-    val (root, _) = Staging.stage(knnCache, dir, "embeddings", "graft-knn-") { root =>
+    val (root, _) = Artifacts.staged(Artifacts.Index, "knn", dir, "embeddings") { root =>
       knnJoinExact(vecs(spark, dir), KnnStageK, knnGrid(spark))
         .write.mode("overwrite").parquet(s"$root/knn")
     }

@@ -1,22 +1,8 @@
 package graft.operators
 
-/** Shared staging scaffold for memoized on-disk artifacts (incremental
-  * states, postings indices): memoize per (dir, data fingerprint of
-  * `table`), allocate a fresh workDir, run `build(root)` — which
-  * writes the artifact under root and returns its cut/meta value.
-  * ONE definition for every staged artifact, so the fingerprint
-  * keying and workDir allocation cannot drift between operators; each
-  * consumer keeps its own cache (bench clears them per lifecycle
-  * group).
-  */
+/** Shared scaffolding for staged-artifact builds (the artifacts
+  * themselves are memoized by [[graft.Artifacts]]). */
 private[graft] object Staging {
-  def stage[M](cache: scala.collection.concurrent.TrieMap[(String, String), (String, M)],
-      dir: String, table: String, prefix: String)(build: (String) => M): (String, M) =
-    cache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, table)), {
-      val root = graft.Engine.workDir(prefix).getAbsolutePath
-      (root, build(root))
-    })
-
   /** Dedicated pool for overlapped staged-artifact write jobs (guide
     * §2.6). Each submitted job parks one pool thread for its whole
     * Spark action, so the pool is sized to the job count at the call

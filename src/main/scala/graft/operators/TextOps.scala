@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.Artifacts
 import graft.sources.Tables
 
 /** Text-analysis operators over the `documents` table (SURVEY §2 B3, B15,
@@ -1088,18 +1089,12 @@ object TextOps {
     * iterative part). Deterministic per (dir, nMerges, data
     * fingerprint) → safe to memoize, same pattern as Clustering's fit
     * cache; cleared by the bench between timed runs. */
-  private val mergeCache =
-    new scala.collection.concurrent.TrieMap[(String, Int, String), Seq[(String, String)]]()
-
-  def clearMergeCache(): Unit = mergeCache.clear()
-
   def bpeEncode(spark: SparkSession, dir: String): DataFrame = {
-    val merges = mergeCache.getOrElseUpdate(
-      (dir, 8, graft.Fs.tableFingerprint(dir, "documents")), {
-        val docs = Tables(spark, dir, "documents")
-        bpeLearn(spark, docs, 8).orderBy("rank").collect()
-          .map(r => (r.getString(1), r.getString(2))).toSeq
-      })
+    val merges = Artifacts.memo(Artifacts.Model, "bpemerges", dir, "documents", 8) {
+      val docs = Tables(spark, dir, "documents")
+      bpeLearn(spark, docs, 8).orderBy("rank").collect()
+        .map(r => (r.getString(1), r.getString(2))).toSeq
+    }
     bpeEncode(spark, Tables(spark, dir, "documents"), merges)
   }
 
@@ -1316,19 +1311,12 @@ object TextOps {
   // appended-index serves are bit-identical to live runs — no
   // frozen-model caveat.
 
-  private val winnowIndexCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-  private val winnowAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-  def clearWinnowIndexCache(): Unit = winnowIndexCache.clear()
-  def clearWinnowAppendCache(): Unit = winnowAppendCache.clear()
-
   private def winnowIndexRows(docs: DataFrame): DataFrame =
     winnowDecoded(docs)
       .withColumn("fgrp", pmod(col("fp"), lit(64L)))
 
   private[graft] def stagedWinnowIndex(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(winnowIndexCache, dir, "documents", "graft-winnowidx-") { root =>
+    Artifacts.staged(Artifacts.Index, "winnowidx", dir, "documents") { root =>
       graft.sources.Sinks.writePartitioned(
         winnowIndexRows(Tables(spark, dir, "documents")),
         root, Seq("fgrp"), Seq("fp", "doc_id"))
@@ -1339,7 +1327,7 @@ object TextOps {
     * the same fgrp dirs (per-doc pure function ⇒ row sets equal the
     * one-shot artifact's). */
   private[graft] def stagedAppendedWinnowIndex(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(winnowAppendCache, dir, "documents", "graft-winnowinc-") { root =>
+    Artifacts.staged(Artifacts.Index, "winnowinc", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -1367,10 +1355,6 @@ object TextOps {
     winnowDupsBody(spark.read.parquet(root))
   }
 
-  private val docCharLenCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Unit)]()
-  def clearDocCharLenCache(): Unit = docCharLenCache.clear()
-
   /** Per-doc codepoint lengths (doc_id, n) staged once beside the
     * winnow artifact — the only piece of [[winnowStats]] the selection
     * table can't answer (zero-selection docs must still report n with
@@ -1378,7 +1362,7 @@ object TextOps {
     * like every other staged artifact. (Distinct from the BM25
     * [[stagedDocLens]] sidecar, whose dl is a TOKEN total.) */
   private[graft] def stagedDocCharLens(spark: SparkSession, dir: String): String = {
-    val (root, _) = Staging.stage(docCharLenCache, dir, "documents", "graft-doccharlen-") { root =>
+    val (root, _) = Artifacts.staged(Artifacts.Index, "doccharlen", dir, "documents") { root =>
       Tables(spark, dir, "documents")
         .select(col("doc_id"),
           length(lower(col("text"))).cast(LongType).as("n"))
@@ -1632,11 +1616,6 @@ object TextOps {
   val PostingsBuckets = 64
   val LookupTerms: (String, String) = ("scan", "merge")
 
-  private val postCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearPostingsCache(): Unit = postCache.clear()
-
   /** Staged FULL postings index: (word, doc_id, tf) hash-bucketed by
     * term into [[PostingsBuckets]] directory partitions and sorted by
     * (word, doc_id) within each, memoized per (dir, data fingerprint).
@@ -1658,7 +1637,7 @@ object TextOps {
     * work, and the (word, doc_id) layout would rest on that sort's
     * stability); one bucket-led sort gives the guaranteed layout. */
   private[graft] def stagedPostings(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(postCache, dir, "documents", "graft-postings-") { root =>
+    Artifacts.staged(Artifacts.Index, "postings", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val nDocs = docs.count()
       writePostings(docs, root, "overwrite")
@@ -1706,11 +1685,6 @@ object TextOps {
       t1: String, t2: String): DataFrame =
     lookupFrom(spark, path, t1, t2)
 
-  private val postAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
-  def clearPostingsAppendCache(): Unit = postAppendCache.clear()
-
   /** Postings artifact built as base + APPENDED crawl increment: the
     * base slice (doc_id < cut) is staged once, then the delta slice is
     * written with `mode("append")` into the SAME bucket directories —
@@ -1723,7 +1697,7 @@ object TextOps {
     * oracle. (Row-group word-sort pruning holds per file; the delta
     * files are sorted the same way.) */
   private[graft] def stagedAppendedPostings(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(postAppendCache, dir, "documents", "graft-postappend-") { root =>
+    Artifacts.staged(Artifacts.Index, "postappend", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)
@@ -1808,9 +1782,6 @@ object TextOps {
   /** Result size for [[indexSearch]]'s catalog row. */
   val SearchK = 25
 
-  private val docLenCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
   /** Doc-length sidecar for [[bm25]]: (doc_id, dl) with dl ≡ Σ tf per
     * doc, staged beside the index with the corpus token total T. One
     * small table — |docs| rows, two ints — the standard companion
@@ -1822,7 +1793,7 @@ object TextOps {
     * tokenizer drift between postings and dl impossible by
     * construction. */
   private[graft] def stagedDocLens(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(docLenCache, dir, "documents", "graft-doclens-") { root =>
+    Artifacts.staged(Artifacts.Index, "doclens", dir, "documents") { root =>
       val (postRoot, nDocs) = stagedPostings(spark, dir)
       spark.read.parquet(postRoot)
         .groupBy("doc_id").agg(sum("tf").as("dl"))
@@ -1946,16 +1917,13 @@ object TextOps {
       LookupTerms._1, LookupTerms._2, SearchK)
   }
 
-  private val docLenAppendCache =
-    new scala.collection.concurrent.TrieMap[(String, String), (String, Long)]()
-
   /** The dl sidecar maintained base + append (disjoint doc slices →
     * disjoint exact dl rows; same cut as the postings append). Each
     * slice's dl rows aggregate that slice's [[postingRows]] — the ONE
     * tokenization path the postings artifact itself uses, so the two
     * appended artifacts cannot disagree on a token. */
   private[graft] def stagedAppendedDocLens(spark: SparkSession, dir: String): (String, Long) =
-    Staging.stage(docLenAppendCache, dir, "documents", "graft-dlappend-") { root =>
+    Artifacts.staged(Artifacts.Index, "dlappend", dir, "documents") { root =>
       val docs = Tables(spark, dir, "documents")
       val n = docs.count()
       val cut = n - math.max(1L, n / 10)

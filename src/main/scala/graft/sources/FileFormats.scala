@@ -29,16 +29,13 @@ import org.apache.spark.sql.types._
   */
 object FileFormats {
 
-  private[graft] val stageCache =
-    new scala.collection.concurrent.TrieMap[(String, String, String), String]()
-
   private def staged(dir: String, table: String, fmt: String)
                     (write: java.io.File => Unit): String =
-    stageCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, table), fmt), {
+    graft.Artifacts.memo(graft.Artifacts.Input, "formatcopy", dir, table, table, fmt) {
       val root = new java.io.File(graft.Engine.workDir(s"graft-$fmt-"), s"${table}_$fmt")
       write(root)
       root.getAbsolutePath
-    })
+    }
 
   /** q_source_text: the reference's flagship workload on the reference's
     * native format — word count over LINE-ORIENTED TEXT FILES

@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 
 /** Write-path layout control (SURVEY §2 A7 generalized to the 100 TB
   * design point). The reference's sink is one text file per reducer
@@ -51,22 +52,18 @@ object Sinks {
       .partitionBy(partitionCols: _*)
       .parquet(path)
 
-  /** Memoized staged layouts, keyed (kind, sf-dir, data fingerprint). */
-  private val partCache =
-    new scala.collection.concurrent.TrieMap[(String, String, String), String]()
-
   /** Stage a month-partitioned copy of `orders` (directory layout
     * `o_month=yyyy-MM/`, rows sorted by o_orderkey within files) via
     * `writePartitioned`; memoized per (dir, data fingerprint). */
   private[graft] def stagedMonthlyOrders(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("monthly", dir, graft.Fs.tableFingerprint(dir, "orders")), {
+    Artifacts.memo(Artifacts.Input, "monthly", dir, "orders") {
       val root = new java.io.File(graft.Engine.workDir("graft-part-"), "orders_monthly")
       writePartitioned(
         graft.sources.Tables(spark, dir, "orders")
           .withColumn("o_month", date_format(col("o_orderdate"), "yyyy-MM")),
         root.getAbsolutePath, Seq("o_month"), Seq("o_orderkey"))
       root.getAbsolutePath
-    })
+    }
 
   /** q_partition_prune: one month of orders read back from the
     * partitioned layout. The month predicate is a PARTITION filter — at
@@ -173,14 +170,14 @@ object Sinks {
         col("l_partkey"), col("l_quantity"))
 
   private[graft] def stagedZOrderedLineitem(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("zorder", dir, graft.Fs.tableFingerprint(dir, "lineitem")), {
+    Artifacts.memo(Artifacts.Input, "zorder", dir, "lineitem") {
       val root = new java.io.File(graft.Engine.workDir("graft-zorder-"), "lineitem_z")
       writeZOrdered(
         graft.sources.Tables(spark, dir, "lineitem")
           .select("l_orderkey", "l_linenumber", "l_suppkey", "l_partkey", "l_quantity"),
         root.getAbsolutePath, "l_suppkey", "l_partkey", numFiles = 16)
       root.getAbsolutePath
-    })
+    }
 
   /** Build a z-ordered artifact that then ACCEPTED a raw append: the
     * base slice (l_orderkey below the top-decile cut) is clustered,
@@ -231,12 +228,12 @@ object Sinks {
         col("l_partkey"), col("l_quantity"))
 
   private[graft] def stagedOptimizedLineitem(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("zoptimize", dir, graft.Fs.tableFingerprint(dir, "lineitem")), {
+    Artifacts.memo(Artifacts.Input, "zoptimize", dir, "lineitem") {
       val root = new java.io.File(graft.Engine.workDir("graft-zoptimize-"), "lineitem_zo")
       buildAppendedZ(spark, dir, root.getAbsolutePath)
       optimizeZOrdered(spark, root.getAbsolutePath, "l_suppkey", "l_partkey", 16)
       root.getAbsolutePath
-    })
+    }
 
   /** Small-file compaction: rewrite a parquet directory into
     * ~`targetBytes`-sized files (computed from the CURRENT on-disk
@@ -358,7 +355,7 @@ object Sinks {
         round(sum("o_totalprice"), 2).as("sum_price"))
 
   private[graft] def stagedRepublishedOrders(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("republish", dir, graft.Fs.tableFingerprint(dir, "orders")), {
+    Artifacts.memo(Artifacts.Input, "republish", dir, "orders") {
       val root = new java.io.File(graft.Engine.workDir("graft-republish-"), "orders_rp")
       val path = root.getAbsolutePath
       val withMonth = graft.sources.Tables(spark, dir, "orders")
@@ -369,7 +366,7 @@ object Sinks {
           .withColumn("o_totalprice", col("o_totalprice") + 1000.0),
         path, "o_month")
       path
-    })
+    }
 
   /** q_compact: the small-file pathology and its repair, end-to-end —
     * documents staged SHATTERED (64 files for a few hundred rows, the
@@ -386,7 +383,7 @@ object Sinks {
         md5(encode(col("text"), "UTF-8")).as("digest"))
 
   private[graft] def stagedCompactedDocuments(spark: SparkSession, dir: String): String =
-    partCache.getOrElseUpdate(("compact", dir, graft.Fs.tableFingerprint(dir, "documents")), {
+    Artifacts.memo(Artifacts.Input, "compact", dir, "documents") {
       val root = new java.io.File(graft.Engine.workDir("graft-compact-"), "documents_c")
       val path = root.getAbsolutePath
       graft.sources.Tables(spark, dir, "documents")
@@ -394,7 +391,7 @@ object Sinks {
         .write.mode("overwrite").parquet(path)
       compact(spark, path)
       path
-    })
+    }
 
   private def walkBytes(f: java.io.File): Long =
     if (f.isDirectory)

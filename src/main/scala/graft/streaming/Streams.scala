@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Artifacts
 import graft.sources.Tables
 
 /** Structured Streaming surface (SURVEY §2 B23–B25): tumbling, sliding
@@ -72,9 +73,6 @@ object Streams {
       .select(col("event_id"), col("ts"), col("user_id"), col("event_type"),
         col("value"))
 
-  private val stagingCache =
-    new scala.collection.concurrent.TrieMap[(String, Boolean, String), File]()
-
   /** Stage the events table as a time-ordered file feed:
     * `NumChunks` parquet files split on the event-time midpoint, then
     * (optionally) a duplicates file re-sending the newest 100 events
@@ -85,18 +83,16 @@ object Streams {
     * FileStreamSource processes files in mtime order, so arrival order
     * is event-time order and nothing real is late. An empty table
     * still feeds the sentinel, so every query yields an empty result
-    * WITH its schema. Memoized per (dir, dupes, data fingerprint);
-    * cleaned up by a shutdown hook. */
+    * WITH its schema. Memoized per (dir, dupes, data fingerprint). */
   private def staged(spark: SparkSession, dir: String, withDupes: Boolean): File =
-    stagingCache.getOrElseUpdate((dir, withDupes, graft.Fs.tableFingerprint(dir, "events")), {
+    Artifacts.memo(Artifacts.Input, "stream", dir, "events", withDupes) {
       val ev = events(spark, dir)
       val mm = ev.agg(min("ts").as("lo"), max("ts").as("hi")).head()
       val (loMs, hiMs) =
         if (mm.isNullAt(0)) (0L, 0L)
         else (mm.getTimestamp(0).getTime, mm.getTimestamp(1).getTime)
       val midMs = loMs + (hiMs - loMs) / 2
-      val root = Files.createTempDirectory("graft-stream-").toFile
-      Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(root)))
+      val root = graft.Engine.workDir("graft-stream-")
       val base = System.currentTimeMillis()
       var seq = 0
       def writeOne(df: DataFrame): Unit = {
@@ -118,7 +114,7 @@ object Streams {
       realFiles.init.foreach(writeOne)
       writeOne(realFiles.last.unionByName(sentinel))
       root
-    })
+    }
 
   /** Run `build` as a streaming query over the staged file feed, through
     * a CHECKPOINTED PARQUET FILE SINK (the production shape: exactly-once
@@ -813,15 +809,12 @@ object Streams {
     stage.listFiles().foreach(_.delete()); stage.delete()
   }
 
-  private val docFeedCache =
-    new scala.collection.concurrent.TrieMap[(String, String), File]()
-
   /** Stage the documents table as an id-ordered file feed of
     * [[NumChunks]] + 2 parquet files (mtime-ordered, one micro-batch
     * each) — an arriving-crawl shape; no sentinel needed (the fold is
     * not watermark-gated; processAllAvailable drains the feed). */
   private def stagedDocFeed(spark: SparkSession, dir: String): File =
-    docFeedCache.getOrElseUpdate((dir, graft.Fs.tableFingerprint(dir, "documents")), {
+    Artifacts.memo(Artifacts.Input, "docfeed", dir, "documents") {
       val docs = Tables(spark, dir, "documents")
       val chunks = NumChunks + 2
       // Chunk boundaries are id QUANTILES, not count-derived id
@@ -841,8 +834,7 @@ object Streams {
       val bounds =
         if (quantiles.length == chunks - 1) quantiles.map(_.toLong)
         else Array.fill(chunks - 1)(Long.MaxValue)
-      val root = Files.createTempDirectory("graft-docfeed-").toFile
-      Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(root)))
+      val root = graft.Engine.workDir("graft-docfeed-")
       val base = System.currentTimeMillis()
       (0 until chunks).foreach { i =>
         val aboveLo =
@@ -853,7 +845,7 @@ object Streams {
           root, f"doc-$i%03d", base + i * 10000L)
       }
       root
-    })
+    }
 
   /** q_stream_neardup: ONLINE near-duplicate detection over the
     * arriving crawl — each micro-batch of documents is checked against
@@ -891,8 +883,7 @@ object Streams {
   def streamNearDup(spark: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     val feed = stagedDocFeed(spark, dir)
-    val stateRoot = Files.createTempDirectory("graft-sndstate-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(stateRoot)))
+    val stateRoot = graft.Engine.workDir("graft-sndstate-")
     val resDir = new File(stateRoot, "res")
     val ckpt = new File(stateRoot, "ckpt").getAbsolutePath
     val q = spark.readStream.schema(DocSchema)
@@ -965,16 +956,8 @@ object Streams {
     val resDir = new File(stateRoot, "res")
     // the batch feeds signatures, shingles, and the result join —
     // pin it once instead of re-reading the feed file per consumer
-    val trace = sys.env.contains("SPARK_GRAFT_TRACE")
-    var t0 = System.nanoTime()
-    def tr(label: String): Unit = if (trace) {
-      val t1 = System.nanoTime()
-      System.err.println(f"[neardup-trace] batch=$batchId $label ${(t1 - t0) / 1e9}%.2f s")
-      t0 = t1
-    }
     val b = b0.localCheckpoint()
     val nBatch = b.count()
-    tr("pin+count")
     // ONE shingle pass per batch, pinned at DOC grain (round 13): the
     // array form feeds the compiled signature kernel directly (one
     // MinHashBandHashes expression — no 128-column aggregate to replan
@@ -988,7 +971,6 @@ object Streams {
     // array_intersect verify; nothing ever explodes to shingle rows
     val batchArr = Dedup.shingleArrays(b).localCheckpoint()
     val batchBands = Dedup.sigBandsFromArrays(batchArr).localCheckpoint()
-    tr("shingle+sig")
     // the batch's OWN index dirs can be written concurrently with the
     // probe/verify: every pre-batchId reader (the accumulator, and the
     // strictly-below listing on the replay path) excludes batch-N dirs
@@ -1032,9 +1014,7 @@ object Streams {
         col("dup_of").isNull.as("keep"))
       .write.mode("overwrite")
       .parquet(new File(resDir, s"batch-$batchId").getAbsolutePath)
-    tr("verify+result")
     idxWrites.foreach(Await.result(_, scala.concurrent.duration.Duration.Inf))
-    tr("idx-writes-join")
     // accumulator = prior ∪ this batch, now valid for batch id + 1
     // (shingle state accumulates at DOC grain — array frames)
     val nb = prior.map(_._1.unionAll(batchBands)).getOrElse(batchBands)
@@ -1053,8 +1033,7 @@ object Streams {
     * collection ever exists anywhere. */
   def streamWordCount(spark: SparkSession, dir: String): DataFrame = {
     val feed = stagedDocFeed(spark, dir)
-    val stateRoot = Files.createTempDirectory("graft-swcstate-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(stateRoot)))
+    val stateRoot = graft.Engine.workDir("graft-swcstate-")
     val ckpt = new File(stateRoot, "ckpt").getAbsolutePath
     @volatile var last = -1L
     val q = spark.readStream.schema(DocSchema)
@@ -1107,8 +1086,7 @@ object Streams {
     * Oracle: q_anomaly's, verbatim. */
   def streamAnomaly(spark: SparkSession, dir: String): DataFrame = {
     val feed = staged(spark, dir, withDupes = false)
-    val stateRoot = Files.createTempDirectory("graft-sanom-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(stateRoot)))
+    val stateRoot = graft.Engine.workDir("graft-sanom-")
     val ckpt = new File(stateRoot, "ckpt").getAbsolutePath
     @volatile var last = -1L
     val q = spark.readStream.schema(EvSchema)
@@ -1192,8 +1170,7 @@ object Streams {
     * estimate. Oracle: q_kmv_distinct's, verbatim. */
   def streamKmv(spark: SparkSession, dir: String): DataFrame = {
     val feed = staged(spark, dir, withDupes = false)
-    val stateRoot = Files.createTempDirectory("graft-skmv-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(stateRoot)))
+    val stateRoot = graft.Engine.workDir("graft-skmv-")
     val ckpt = new File(stateRoot, "ckpt").getAbsolutePath
     @volatile var last = -1L
     val q = spark.readStream.schema(EvSchema)
@@ -1243,8 +1220,7 @@ object Streams {
     * one 9-column add, no retraining pass anywhere. */
   def streamLinreg(spark: SparkSession, dir: String): DataFrame = {
     val feed = stagedDocFeed(spark, dir)
-    val stateRoot = Files.createTempDirectory("graft-slrstate-").toFile
-    Runtime.getRuntime.addShutdownHook(new Thread(() => graft.Fs.rmRf(stateRoot)))
+    val stateRoot = graft.Engine.workDir("graft-slrstate-")
     val ckpt = new File(stateRoot, "ckpt").getAbsolutePath
     @volatile var last = -1L
     val q = spark.readStream.schema(DocSchema)

@@ -69,8 +69,8 @@ class FileFormatsSpec extends SparkSuiteBase {
       .map(r => r.getString(0) -> ((r.getDouble(1), r.getLong(2)))).toMap
     assert(got === want && got.nonEmpty)
     // columnar: a filtered read over the staged ORC pushes the predicate
-    val orcDir = FileFormats.stageCache.collectFirst {
-      case ((_, _, "orc"), d) => d
+    val orcDir = Artifacts.entries("formatcopy").collectFirst {
+      case (Seq(_, "orc"), d: String) => d
     }.get
     val plan = spark.read.orc(orcDir).where(col("p_partkey") === 1L)
       .queryExecution.executedPlan.toString
@@ -95,11 +95,11 @@ class FileFormatsSpec extends SparkSuiteBase {
     FileFormats.csvGroupSum(spark, sf).collect()
     FileFormats.jsonGroupSum(spark, sf).collect()
     // row-format stagings only: the schema-evolution staging ("evolve")
-    // shares this cache but is parquet (splittable WITH compression), and
+    // shares this memo but is parquet (splittable WITH compression), and
     // the binaryFile staging ("bin") is one whole file per doc (not a
     // Spark-writer part-file layout), so neither rule applies to them
-    def rowFmtDirs = FileFormats.stageCache.collect {
-      case ((_, _, fmt), d) if fmt != "evolve" && fmt != "bin" => d
+    def rowFmtDirs = Artifacts.entries("formatcopy").collect {
+      case (Seq(_, fmt), d: String) if fmt != "evolve" && fmt != "bin" => d
     }.toSet
     val dirs = rowFmtDirs
     assert(dirs.nonEmpty)

@@ -96,7 +96,7 @@ class PipelineSpec extends SparkSuiteBase {
   }
 
   test("curateWebAppend ≡ one-shot curateWeb on the enriched fixture (staged index path)") {
-    graft.operators.Pipeline.clearWebStateCache()
+    Artifacts.clear("webstate")
     val inc = Pipeline.curateWebAppend(spark, sf).orderBy("lang").collect()
     val one = Pipeline.curateWeb(spark, sf).orderBy("lang").collect()
     assert(inc.toSeq === one.toSeq,
