@@ -837,10 +837,9 @@ object Dedup {
     * slices holding candidate docs. */
   private[graft] def stagedBandIndex(spark: SparkSession, dir: String): (String, Long, Long) = {
     val (root, (cut, deltaDocs)) = Artifacts.staged(Artifacts.Index, "bandidx", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.count()
-      val cut = n - math.max(1L, n / 10)
-      val base = docs.where(col("doc_id") < cut)
+      val n = Staging.rows(spark, dir, "documents")
+      val cut = Staging.lateCut(n)
+      val base = Tables(spark, dir, "documents").where(col("doc_id") < cut)
       // the broadcast gate needs the delta ROW count, not the id
       // threshold — with sparse doc ids the two diverge arbitrarily
       // (the Similarity.stagedAppendedIndex refresh-fraction fix, same

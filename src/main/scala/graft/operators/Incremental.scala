@@ -129,10 +129,8 @@ object Incremental {
     * memoized per (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedWordState(spark: SparkSession, dir: String): (String, Long) =
     Artifacts.staged(Artifacts.Index, "wcstate", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.count()
-      val cut = n - math.max(1L, n / 10)
-      wcPartials(docs.where(col("doc_id") < cut))
+      val cut = Staging.lateCut(Staging.rows(spark, dir, "documents"))
+      wcPartials(Tables(spark, dir, "documents").where(col("doc_id") < cut))
         .write.mode("overwrite").parquet(s"$root/state")
       cut
     }
@@ -166,10 +164,8 @@ object Incremental {
     * memoized per (dir, data fingerprint); returns (root, cut). */
   private[graft] def stagedIndexState(spark: SparkSession, dir: String): (String, Long) =
     Artifacts.staged(Artifacts.Index, "idxstate", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.count()
-      val cut = n - math.max(1L, n / 10)
-      TextOps.indexPartials(docs.where(col("doc_id") < cut))
+      val cut = Staging.lateCut(Staging.rows(spark, dir, "documents"))
+      TextOps.indexPartials(Tables(spark, dir, "documents").where(col("doc_id") < cut))
         .write.mode("overwrite").parquet(s"$root/state")
       cut
     }
@@ -284,7 +280,7 @@ object Incremental {
     Artifacts.staged(Artifacts.Index, "hllstate", dir, "lineitem") { root =>
       val li = Tables(spark, dir, "lineitem")
       val maxKey = li.agg(max("l_orderkey")).head().getLong(0) // 1 driver row
-      val cut = maxKey - math.max(1L, maxKey / 10)
+      val cut = Staging.lateCut(maxKey)
       Relational.hllRegisters(li.where(col("l_orderkey") < cut))
         .write.mode("overwrite").parquet(s"$root/state")
       cut

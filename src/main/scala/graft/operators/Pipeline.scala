@@ -735,7 +735,7 @@ object Pipeline {
           Tables(spark, dir, "documents"))
         val nFix = corpus
           .where(col("doc_id") < graft.sources.WebCorpus.SliceOff).count()
-        val fixCut = nFix - math.max(1L, nFix / 10L)
+        val fixCut = Staging.lateCut(nFix)
         val base = corpus.where(!deltaPred(fixCut))
         val nDelta = corpus.where(deltaPred(fixCut)).count()
 

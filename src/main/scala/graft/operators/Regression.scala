@@ -142,10 +142,8 @@ object Regression {
     * returns (root, id cutoff). */
   private[graft] def stagedSumsState(spark: SparkSession, dir: String): (String, Long) =
     Artifacts.staged(Artifacts.Index, "linregstate", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.count()
-      val cut = n - math.max(1L, n / 10)
-      sums(feats(docs.where(col("doc_id") < cut)))
+      val cut = Staging.lateCut(Staging.rows(spark, dir, "documents"))
+      sums(feats(Tables(spark, dir, "documents").where(col("doc_id") < cut)))
         .write.mode("overwrite").parquet(s"$root/state")
       cut
     }

@@ -193,8 +193,7 @@ object Similarity {
 
   /** Corpus cardinality of `embeddings` under `dir` (memoized). */
   def corpusSize(spark: SparkSession, dir: String): Long =
-    Artifacts.memo(Artifacts.Input, "corpussize", dir, "embeddings")(
-      Tables(spark, dir, "embeddings").count())
+    Staging.rows(spark, dir, "embeddings")
 
   /** IVF list count ≈ √n (the standard inverted-file sizing: per-query
     * work nProbe·n/K + K centroid distances is minimized at K ∝ √n),
@@ -453,15 +452,7 @@ object Similarity {
     * cid-partitioned corpus + the centroids that defined it (quantizer
     * state k·64 micro-unit longs — bounded driver memory). */
   private[graft] def stagedIvfIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]]) =
-    Artifacts.staged(Artifacts.Index, "ivf_index", dir, "embeddings") { root =>
-      val lists = ivfK(corpusSize(spark, dir))
-      val cents = ivfCentsFixed(spark, dir, lists)
-      val assigned = vecsQ(spark, dir)
-        .withColumn("best", element_at(graft.functions.VectorExprs.nearestLists(col("eq"), cents, 1), 1))
-        .withColumn("cid", col("best.cid")).drop("best", "eq")
-      graft.sources.Sinks.writePartitioned(assigned, root, Seq("cid"), Seq("vec_id"))
-      cents
-    }
+    ivfIndex(spark, dir, appended = false)
 
   /** North-star q_simsearch_ivf_indexed: IVF search over the PERSISTED
     * index. Identical search semantics to `ivfTopK` (same memoized
@@ -563,36 +554,45 @@ object Similarity {
       AppendRefreshFraction
 
   private[graft] def stagedAppendedIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]]) =
-    Artifacts.staged(Artifacts.Index, "ivf_index_inc", dir, "embeddings") { root =>
+    ivfIndex(spark, dir, appended = true)
+
+  /** The `cid=` list layout of the IVF and IVFPQ indices. Never
+    * compacted: an append leaves at most the base file and one delta
+    * file per list. */
+  private val ListLayout = Staging.Partitioned(Seq("cid"), Seq("vec_id"))
+
+  /** One build body for both IVF indices: every vector written to the
+    * list of its nearest centroid. The one-shot form assigns under the
+    * shared `kmeansfixed` fit the live queries use. The appended form
+    * trains its quantizer on the base only — the delta does not exist
+    * yet; degenerate corpora whose base slice is empty fall back to a
+    * full fit (zero centroids would break the assignment kernel), and a
+    * batch past the refresh threshold takes the REBUILD path (fresh
+    * full-corpus fit) instead of appending into stale lists. The
+    * refresh fraction uses COUNTED base rows, not the id threshold:
+    * the cut is an id cutoff, and with sparse ids the two diverge
+    * arbitrarily (ids 0..9 ∪ 5000.. would make cut≈900 claim a 10%
+    * append while 99% of the rows are actually late). */
+  private def ivfIndex(spark: SparkSession, dir: String,
+      appended: Boolean): (String, Array[Array[Long]]) =
+    Artifacts.staged(Artifacts.Index, if (appended) "ivf_index_inc" else "ivf_index", dir, "embeddings") { root =>
       val n = corpusSize(spark, dir)
-      val cut = n - math.max(1L, n / 10) // last ~10% of IDS arrive "late"
       val v = vecsQ(spark, dir)
-      // quantizer trained on the base only — the delta does not exist
-      // yet; degenerate corpora whose base slice is empty fall back to
-      // a full fit (zero centroids would break the assignment kernel),
-      // and a batch past the refresh threshold takes the REBUILD path
-      // (fresh full-corpus fit) instead of appending into stale lists.
-      // The refresh fraction uses COUNTED base rows, not the id
-      // threshold: `cut` is an id cutoff, and with sparse ids the two
-      // diverge arbitrarily (ids 0..9 ∪ 5000.. would make cut≈900
-      // claim a 10% append while 99% of the rows are actually late).
-      val baseRows = v.where(col("vec_id") < cut).count()
-      val baseFit =
-        if (appendNeedsRefresh(baseRows, n - baseRows)) Array.empty[Array[Long]]
-        else Clustering.fitFixed(
-          v.where(col("vec_id") < cut).select(col("vec_id"), col("eq").as("e")),
-          Clustering.Iters, ivfK(n))
-      val cents =
-        if (baseFit.nonEmpty) baseFit
-        else Clustering.fitFixed(v.select(col("vec_id"), col("eq").as("e")),
-          Clustering.Iters, ivfK(n))
-      def assigned(df: DataFrame): DataFrame = df
+      val arrival = Staging.arrival(spark, dir, "embeddings", "vec_id", appended)
+      def fit(df: DataFrame): Array[Array[Long]] = Clustering.fitFixed(
+        df.select(col("vec_id"), col("eq").as("e")), Clustering.Iters, ivfK(n))
+      val cents = arrival match {
+        case Staging.OneShot => ivfCentsFixed(spark, dir, ivfK(n))
+        case late: Staging.Late =>
+          val baseRows = v.where(late.base).count()
+          val baseFit =
+            if (appendNeedsRefresh(baseRows, n - baseRows)) Array.empty[Array[Long]]
+            else fit(v.where(late.base))
+          if (baseFit.nonEmpty) baseFit else fit(v)
+      }
+      Staging.stage(spark, root, ListLayout, arrival.slices(v).map(_
         .withColumn("best", element_at(graft.functions.VectorExprs.nearestLists(col("eq"), cents, 1), 1))
-        .withColumn("cid", col("best.cid")).drop("best", "eq")
-      graft.sources.Sinks.writePartitioned(
-        assigned(v.where(col("vec_id") < cut)), root, Seq("cid"), Seq("vec_id"))
-      graft.sources.Sinks.appendPartitioned(
-        assigned(v.where(col("vec_id") >= cut)), root, Seq("cid"), Seq("vec_id"))
+        .withColumn("cid", col("best.cid")).drop("best", "eq")))
       cents
     }
 
@@ -662,17 +662,8 @@ object Similarity {
       .select(col("vec_id"), posexplode(col("buckets")).as(Seq("t", "bucket")))
       .withColumn("bgrp", pmod(col("bucket"), lit(groups)))
 
-  private[graft] def stagedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) = {
-    val (root, (np, nt)) = Artifacts.staged(Artifacts.Index, "lsh_index", dir, "embeddings") { root =>
-      val n = corpusSize(spark, dir)
-      val (np, nt) = (lshPlanes(n), lshTables(n))
-      graft.sources.Sinks.writePartitioned(
-        lshIndexRows(vecs(spark, dir), np, nt, lshBucketGroups(n)),
-        root, Seq("t", "bgrp"), Seq("vec_id"))
-      (np, nt)
-    }
-    (root, np, nt)
-  }
+  private[graft] def stagedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) =
+    lshIndex(spark, dir, appended = false)
 
   /** Base staged once, the late decile's rows appended into the same
     * (t, bgrp) dirs, then the touched dirs COMPACTED in one job
@@ -680,22 +671,22 @@ object Similarity {
     * append-maintained index accretes files linearly in appends — the
     * post-append compact folds them back to ~one file per dir, keeping
     * the serve path's listing cost flat no matter how many appends the
-    * artifact has absorbed. Plane count sizes from the FULL corpus
-    * count (the ivfK convention) so base and delta hash under
-    * identical geometry. */
-  private[graft] def stagedAppendedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) = {
-    val (root, (np, nt)) = Artifacts.staged(Artifacts.Index, "lsh_index_inc", dir, "embeddings") { root =>
+    * artifact has absorbed. */
+  private[graft] def stagedAppendedLshIndex(spark: SparkSession, dir: String): (String, Int, Int) =
+    lshIndex(spark, dir, appended = true)
+
+  /** One build body for both LSH indices. Plane count sizes from the
+    * FULL corpus count (the ivfK convention) so base and delta hash
+    * under identical geometry. */
+  private def lshIndex(spark: SparkSession, dir: String,
+      appended: Boolean): (String, Int, Int) = {
+    val (root, (np, nt)) = Artifacts.staged(Artifacts.Index, if (appended) "lsh_index_inc" else "lsh_index", dir, "embeddings") { root =>
       val n = corpusSize(spark, dir)
-      val cut = n - math.max(1L, n / 10)
       val (np, nt) = (lshPlanes(n), lshTables(n))
-      val v = vecs(spark, dir)
-      graft.sources.Sinks.writePartitioned(
-        lshIndexRows(v.where(col("vec_id") < cut), np, nt, lshBucketGroups(n)),
-        root, Seq("t", "bgrp"), Seq("vec_id"))
-      graft.sources.Sinks.appendPartitioned(
-        lshIndexRows(v.where(col("vec_id") >= cut), np, nt, lshBucketGroups(n)),
-        root, Seq("t", "bgrp"), Seq("vec_id"))
-      graft.sources.Sinks.compactPartitioned(spark, root, Seq("t", "bgrp"), Seq("vec_id"))
+      Staging.stage(spark, root,
+        Staging.Partitioned(Seq("t", "bgrp"), Seq("vec_id"), compacted = true),
+        Staging.arrival(spark, dir, "embeddings", "vec_id", appended)
+          .slices(vecs(spark, dir)).map(lshIndexRows(_, np, nt, lshBucketGroups(n))))
       (np, nt)
     }
     (root, np, nt)
@@ -906,11 +897,8 @@ object Similarity {
   private[graft] def stagedPqIndex(spark: SparkSession, dir: String): (String, Array[Array[Array[Long]]]) =
     Artifacts.staged(Artifacts.Index, "pq_index", dir, "embeddings") { root =>
       val books = pqCodebooks(spark, dir)
-      val enc = vecsQ(spark, dir)
-        .select(col("vec_id"), pqCodesCol(books, "eq").as("codes"))
-      enc.repartitionByRange(col("vec_id"))
-        .sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(root)
+      Staging.stage(spark, root, Staging.Ranged("vec_id"), Seq(vecsQ(spark, dir)
+        .select(col("vec_id"), pqCodesCol(books, "eq").as("codes"))))
       books
     }
 
@@ -1016,16 +1004,8 @@ object Similarity {
     * per vector), full vectors only for the query batch + shortlist.
     * Centroids and codebooks are stored beside the path so a later
     * model-memo clear cannot desync codes from the model. */
-  private[graft] def stagedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    val (root, (cents, books)) = Artifacts.staged(Artifacts.Index, "ivfpq_index", dir, "embeddings") { root =>
-      val (cents, books) = ivfpqModel(spark, dir)
-      val enc = residuals(vecsQ(spark, dir), centsDf(spark, cents), cents)
-        .select(col("vec_id"), col("cid"), pqCodesCol(books, "rq").as("codes"))
-      graft.sources.Sinks.writePartitioned(enc, root, Seq("cid"), Seq("vec_id"))
-      (cents, books)
-    }
-    (root, cents, books)
-  }
+  private[graft] def stagedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) =
+    ivfpqIndex(spark, dir, appended = false)
 
   /** q_simsearch_ivfpq_indexed: IVFPQ search served from the persisted
     * codes index — the [[ivfTopKIndexed]] partition-pruning story
@@ -1079,41 +1059,45 @@ object Similarity {
     * oracle replays the base-only fits. A batch past
     * [[AppendRefreshFraction]] takes the REBUILD path (fresh
     * full-corpus model), the [[stagedAppendedIndex]] convention. */
-  private[graft] def stagedAppendedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) = {
-    val (root, (cents, books)) = Artifacts.staged(Artifacts.Index, "ivfpq_index_inc", dir, "embeddings") { root =>
-      val n = corpusSize(spark, dir)
-      val cut = n - math.max(1L, n / 10)
+  private[graft] def stagedAppendedIvfpqIndex(spark: SparkSession, dir: String): (String, Array[Array[Long]], Array[Array[Array[Long]]]) =
+    ivfpqIndex(spark, dir, appended = true)
+
+  /** One build body for both IVFPQ indices: every vector's codes
+    * written to the list of its nearest centroid. The one-shot form
+    * encodes under the shared `ivfpqmodel` memo. The appended form fits
+    * its own model on the base slice, keeping cid beside the residual:
+    * the SAME checkpointed table feeds the 8 codebook fits AND the base
+    * encode, so the coarse assignment (K distance kernels over ~90% of
+    * the corpus) runs once, not twice per build. Past the refresh
+    * fraction it REBUILDS one-shot under a full-corpus model. The
+    * oracle always replays the base-only fit; with the ~10% arrival
+    * cut the refresh branch is reachable only on a degenerate ≤1-row
+    * corpus (cut = 0), where the operator contract, not the oracle,
+    * governs — the same documented convention as ivf_append. */
+  private def ivfpqIndex(spark: SparkSession, dir: String, appended: Boolean): (String, Array[Array[Long]], Array[Array[Array[Long]]]) = {
+    val (root, (cents, books)) = Artifacts.staged(Artifacts.Index, if (appended) "ivfpq_index_inc" else "ivfpq_index", dir, "embeddings") { root =>
       val v = vecsQ(spark, dir)
-      val base = v.where(col("vec_id") < cut)
-      val baseRows = base.count()
-      // refresh branch: mirrors the stagedAppendedIndex convention —
-      // past the fraction the index REBUILDS under a full-corpus model
-      // (one-shot write, no append). The oracle always replays the
-      // base-only fit; with the ~10% arrival cut this branch is
-      // reachable only on a degenerate ≤1-row corpus (cut = 0), where
-      // the operator contract, not the oracle, governs — the same
-      // documented convention as ivf_append.
-      val refresh = appendNeedsRefresh(baseRows, n - baseRows)
-      val fitSrc = if (refresh) v else base
-      val cents = Clustering.fitFixed(
-        fitSrc.select(col("vec_id"), col("eq").as("e")),
-        Clustering.Iters, ivfK(n))
-      val cdf = centsDf(spark, cents)
-      // keep cid beside the residual: the SAME checkpointed table feeds
-      // the 8 codebook fits AND the base encode — the coarse assignment
-      // (K distance kernels over ~90% of the corpus) runs once, not
-      // twice per build
-      val resid = residuals(fitSrc, cdf, cents)
-        .select(col("vec_id"), col("cid"), col("rq")).localCheckpoint()
-      val books = fitSubspaceBooks(resid.select(col("vec_id"), col("rq")), "rq")
-      val fitEnc = resid
-        .select(col("vec_id"), col("cid"), pqCodesCol(books, "rq").as("codes"))
-      graft.sources.Sinks.writePartitioned(fitEnc, root, Seq("cid"), Seq("vec_id"))
-      if (!refresh)
-        graft.sources.Sinks.appendPartitioned(
-          residuals(v.where(col("vec_id") >= cut), cdf, cents)
-            .select(col("vec_id"), col("cid"), pqCodesCol(books, "rq").as("codes")),
-          root, Seq("cid"), Seq("vec_id"))
+      // residual frames (vec_id, cid, rq) in write order
+      val (cents, books, parts) = Staging.arrival(spark, dir, "embeddings", "vec_id", appended) match {
+        case Staging.OneShot =>
+          val (c, b) = ivfpqModel(spark, dir)
+          (c, b, Seq(residuals(v, centsDf(spark, c), c)))
+        case late: Staging.Late =>
+          val n = corpusSize(spark, dir)
+          val base = v.where(late.base)
+          val baseRows = base.count()
+          val refresh = appendNeedsRefresh(baseRows, n - baseRows)
+          val fitSrc = if (refresh) v else base
+          val c = Clustering.fitFixed(
+            fitSrc.select(col("vec_id"), col("eq").as("e")), Clustering.Iters, ivfK(n))
+          val resid = residuals(fitSrc, centsDf(spark, c), c)
+            .select(col("vec_id"), col("cid"), col("rq")).localCheckpoint()
+          val b = fitSubspaceBooks(resid.select(col("vec_id"), col("rq")), "rq")
+          (c, b, if (refresh) Seq(resid)
+            else Seq(resid, residuals(v.where(!late.base), centsDf(spark, c), c)))
+      }
+      Staging.stage(spark, root, ListLayout, parts.map(
+        _.select(col("vec_id"), col("cid"), pqCodesCol(books, "rq").as("codes"))))
       (cents, books)
     }
     (root, cents, books)
@@ -1312,11 +1296,7 @@ object Similarity {
     * buckets, no recall knee — the simplest maintenance story in the
     * family). Sorted by vec_id for id-ranged maintenance reads. */
   private[graft] def stagedBqIndex(spark: SparkSession, dir: String): String =
-    Artifacts.staged(Artifacts.Index, "bq_index", dir, "embeddings") { root =>
-      bqSigRows(vecs(spark, dir))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(root)
-    }._1
+    bqIndex(spark, dir, appended = false)
 
   /** Append-maintained BQ index: base staged over the early ids, the
     * late decile's signatures appended as one delta file, the flat dir
@@ -1325,17 +1305,13 @@ object Similarity {
     * rows ⇒ appended searches ≡ live full-corpus searches bit-for-bit
     * — the LSH argument, without even a plane pool. */
   private[graft] def stagedAppendedBqIndex(spark: SparkSession, dir: String): String =
-    Artifacts.staged(Artifacts.Index, "bq_index_inc", dir, "embeddings") { root =>
-      val n = corpusSize(spark, dir)
-      val cut = n - math.max(1L, n / 10)
-      val v = vecs(spark, dir)
-      bqSigRows(v.where(col("vec_id") < cut))
-        .repartitionByRange(col("vec_id")).sortWithinPartitions("vec_id")
-        .write.mode("overwrite").parquet(root)
-      bqSigRows(v.where(col("vec_id") >= cut))
-        .coalesce(1).sortWithinPartitions("vec_id")
-        .write.mode("append").parquet(root)
-      graft.sources.Sinks.compact(spark, root)
+    bqIndex(spark, dir, appended = true)
+
+  private def bqIndex(spark: SparkSession, dir: String, appended: Boolean): String =
+    Artifacts.staged(Artifacts.Index, if (appended) "bq_index_inc" else "bq_index", dir, "embeddings") { root =>
+      Staging.stage(spark, root, Staging.Ranged("vec_id", compacted = true),
+        Staging.arrival(spark, dir, "embeddings", "vec_id", appended)
+          .slices(vecs(spark, dir)).map(bqSigRows))
     }._1
 
   /** q_simsearch_bq_indexed: served from the persisted signature table

@@ -1315,44 +1315,33 @@ object TextOps {
     winnowDecoded(docs)
       .withColumn("fgrp", pmod(col("fp"), lit(64L)))
 
-  private[graft] def stagedWinnowIndex(spark: SparkSession, dir: String): (String, Long) =
-    Artifacts.staged(Artifacts.Index, "winnowidx", dir, "documents") { root =>
-      graft.sources.Sinks.writePartitioned(
-        winnowIndexRows(Tables(spark, dir, "documents")),
-        root, Seq("fgrp"), Seq("fp", "doc_id"))
-      spark.read.parquet(root).count()
-    }
+  private[graft] def stagedWinnowIndex(spark: SparkSession, dir: String): String =
+    winnowIndex(spark, dir, appended = false)
 
   /** Base staged once, the late decile's selection rows appended into
     * the same fgrp dirs (per-doc pure function ⇒ row sets equal the
     * one-shot artifact's). */
-  private[graft] def stagedAppendedWinnowIndex(spark: SparkSession, dir: String): (String, Long) =
-    Artifacts.staged(Artifacts.Index, "winnowinc", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.count()
-      val cut = n - math.max(1L, n / 10)
-      graft.sources.Sinks.writePartitioned(
-        winnowIndexRows(docs.where(col("doc_id") < cut)),
-        root, Seq("fgrp"), Seq("fp", "doc_id"))
-      graft.sources.Sinks.appendPartitioned(
-        winnowIndexRows(docs.where(col("doc_id") >= cut)),
-        root, Seq("fgrp"), Seq("fp", "doc_id"))
-      spark.read.parquet(root).count()
-    }
+  private[graft] def stagedAppendedWinnowIndex(spark: SparkSession, dir: String): String =
+    winnowIndex(spark, dir, appended = true)
+
+  private def winnowIndex(spark: SparkSession, dir: String, appended: Boolean): String =
+    Artifacts.staged(Artifacts.Index, if (appended) "winnowinc" else "winnowidx", dir, "documents") { root =>
+      Staging.stage(spark, root, Staging.Partitioned(Seq("fgrp"), Seq("fp", "doc_id")),
+        Staging.arrival(spark, dir, "documents", "doc_id", appended)
+          .slices(Tables(spark, dir, "documents")).map(winnowIndexRows))
+    }._1
 
   /** North-star q_winnow_dups_indexed: dup pairs served from the
     * persisted selection artifact — ≡ live [[winnowDups]] bit-for-bit
     * (integer fp and the gram string round-trip parquet exactly). */
   def winnowDupsIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val (root, _) = stagedWinnowIndex(spark, dir)
-    winnowDupsBody(spark.read.parquet(root))
+    winnowDupsBody(spark.read.parquet(stagedWinnowIndex(spark, dir)))
   }
 
   /** North-star q_winnow_dups_append: served from the append-
     * maintained artifact; ≡ live by construction (see block comment). */
   def winnowDupsAppended(spark: SparkSession, dir: String): DataFrame = {
-    val (root, _) = stagedAppendedWinnowIndex(spark, dir)
-    winnowDupsBody(spark.read.parquet(root))
+    winnowDupsBody(spark.read.parquet(stagedAppendedWinnowIndex(spark, dir)))
   }
 
   /** Per-doc codepoint lengths (doc_id, n) staged once beside the
@@ -1385,9 +1374,8 @@ object TextOps {
     * the double division has the same operand order), so the live
     * oracle is shared verbatim. */
   def winnowStatsIndexed(spark: SparkSession, dir: String): DataFrame = {
-    val (root, _) = stagedWinnowIndex(spark, dir)
     val spans = winnowSpansSel(
-        spark.read.parquet(root).select("doc_id", "pos", "fp", "gram"))
+        spark.read.parquet(stagedWinnowIndex(spark, dir)).select("doc_id", "pos", "fp", "gram"))
       .groupBy("doc_id").agg(sum("span_len").as("dup_chars"))
     spark.read.parquet(stagedDocCharLens(spark, dir))
       .join(spans, Seq("doc_id"), "left")
@@ -1627,22 +1615,14 @@ object TextOps {
     * vocabulary size — a million-term vocabulary is still 64
     * directories — while the within-bucket (word, doc_id) sort gives
     * parquet row-group min/max stats that skip everything but the
-    * probed terms inside a bucket. */
-  /** Returns (artifact root, corpus doc count). The count is staged
+    * probed terms inside a bucket.
+    *
+    * Returns (artifact root, corpus doc count). The count is staged
     * WITH the artifact (it describes the same corpus version), so
     * serve-time queries never run a corpus job — [[indexSearch]]'s N
-    * is a memo read, not a count() per call. The explicit sort leads
-    * with `bucket`: the partitioned writer requires [bucket] ordering
-    * and would otherwise insert its OWN per-partition sort (double
-    * work, and the (word, doc_id) layout would rest on that sort's
-    * stability); one bucket-led sort gives the guaranteed layout. */
+    * is a memo read, not a count() per call. */
   private[graft] def stagedPostings(spark: SparkSession, dir: String): (String, Long) =
-    Artifacts.staged(Artifacts.Index, "postings", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val nDocs = docs.count()
-      writePostings(docs, root, "overwrite")
-      nDocs
-    }
+    postings(spark, dir, appended = false)
 
   /** Bucketed posting rows for a doc slice: (word, doc_id, tf, bucket).
     * tf is per (word, doc), so disjoint doc slices produce disjoint,
@@ -1658,11 +1638,8 @@ object TextOps {
         graft.functions.Fnv32a.mix32(graft.functions.Fnv32a.fnv32a(col("word")))
           .bitwiseAND(PostingsBuckets - 1).cast("int"))
 
-  private def writePostings(docs: DataFrame, root: String, mode: String): Unit =
-    postingRows(docs)
-      .repartition(col("bucket"))
-      .sortWithinPartitions("bucket", "word", "doc_id")
-      .write.partitionBy("bucket").mode(mode).parquet(root)
+  /** Term-bucket dirs, rows sorted by (word, doc_id) within each file. */
+  private val PostingsLayout = Staging.Partitioned(Seq("bucket"), Seq("word", "doc_id"))
 
   // ---- df-form library surface for the postings index (arbitrary
   // corpora and paths; the catalog q_index_* rows ride the staged
@@ -1671,13 +1648,13 @@ object TextOps {
   /** Build (or overwrite) a bucketed postings index for `docs`
     * (doc_id, text) at `path`. */
   def buildPostingsIndex(docs: DataFrame, path: String): Unit =
-    writePostings(docs, path, "overwrite")
+    PostingsLayout.write(postingRows(docs), path, "overwrite")
 
   /** Append an increment's postings into an existing index at `path`
     * — delta-sized files into the same bucket dirs; callers feed only
     * NEW doc_ids (disjoint slices keep the row set exact). */
   def appendPostingsIndex(docs: DataFrame, path: String): Unit =
-    writePostings(docs, path, "append")
+    PostingsLayout.write(postingRows(docs), path, "append")
 
   /** Conjunctive lookup against an index built by the two calls
     * above: (doc_id, tf_a, tf_b) for docs containing both terms. */
@@ -1697,13 +1674,14 @@ object TextOps {
     * oracle. (Row-group word-sort pruning holds per file; the delta
     * files are sorted the same way.) */
   private[graft] def stagedAppendedPostings(spark: SparkSession, dir: String): (String, Long) =
-    Artifacts.staged(Artifacts.Index, "postappend", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.count()
-      val cut = n - math.max(1L, n / 10)
-      writePostings(docs.where(col("doc_id") < cut), root, "overwrite")
-      writePostings(docs.where(col("doc_id") >= cut), root, "append")
-      n
+    postings(spark, dir, appended = true)
+
+  private def postings(spark: SparkSession, dir: String, appended: Boolean): (String, Long) =
+    Artifacts.staged(Artifacts.Index, if (appended) "postappend" else "postings", dir, "documents") { root =>
+      Staging.stage(spark, root, PostingsLayout,
+        Staging.arrival(spark, dir, "documents", "doc_id", appended)
+          .slices(Tables(spark, dir, "documents")).map(postingRows))
+      Staging.rows(spark, dir, "documents")
     }
 
   /** The JVM twin of the artifact's bucket expression (term routing is
@@ -1793,12 +1771,18 @@ object TextOps {
     * tokenizer drift between postings and dl impossible by
     * construction. */
   private[graft] def stagedDocLens(spark: SparkSession, dir: String): (String, Long) =
-    Artifacts.staged(Artifacts.Index, "doclens", dir, "documents") { root =>
-      val (postRoot, nDocs) = stagedPostings(spark, dir)
-      spark.read.parquet(postRoot)
-        .groupBy("doc_id").agg(sum("tf").as("dl"))
-        .repartitionByRange(col("doc_id")).sortWithinPartitions("doc_id")
-        .write.mode("overwrite").parquet(root)
+    docLens(spark, dir, appended = false)
+
+  /** One build body for both doc-length sidecars: the dl rows of the
+    * postings artifact of the same form, staged under the same arrival
+    * (disjoint doc slices → disjoint exact dl rows). */
+  private def docLens(spark: SparkSession, dir: String, appended: Boolean): (String, Long) =
+    Artifacts.staged(Artifacts.Index, if (appended) "dlappend" else "doclens", dir, "documents") { root =>
+      val (postRoot, nDocs) = postings(spark, dir, appended)
+      Staging.stage(spark, root, Staging.Ranged("doc_id"),
+        Staging.arrival(spark, dir, "documents", "doc_id", appended)
+          .slices(spark.read.parquet(postRoot))
+          .map(_.groupBy("doc_id").agg(sum("tf").as("dl"))))
       val r = spark.read.parquet(root)
         .agg(sum("dl"), max("dl")).head()
       requireBm25Safe(nDocs, r.getLong(0), r.getLong(1))
@@ -1917,27 +1901,11 @@ object TextOps {
       LookupTerms._1, LookupTerms._2, SearchK)
   }
 
-  /** The dl sidecar maintained base + append (disjoint doc slices →
-    * disjoint exact dl rows; same cut as the postings append). Each
-    * slice's dl rows aggregate that slice's [[postingRows]] — the ONE
-    * tokenization path the postings artifact itself uses, so the two
-    * appended artifacts cannot disagree on a token. */
+  /** The dl sidecar maintained base + append over the appended
+    * postings artifact — the ONE tokenization path, so the two appended
+    * artifacts cannot disagree on a token. */
   private[graft] def stagedAppendedDocLens(spark: SparkSession, dir: String): (String, Long) =
-    Artifacts.staged(Artifacts.Index, "dlappend", dir, "documents") { root =>
-      val docs = Tables(spark, dir, "documents")
-      val n = docs.count()
-      val cut = n - math.max(1L, n / 10)
-      def dls(slice: DataFrame): DataFrame =
-        postingRows(slice).groupBy("doc_id").agg(sum("tf").as("dl"))
-      dls(docs.where(col("doc_id") < cut))
-        .write.mode("overwrite").parquet(root)
-      dls(docs.where(col("doc_id") >= cut))
-        .write.mode("append").parquet(root)
-      val r = spark.read.parquet(root)
-        .agg(sum("dl"), max("dl")).head()
-      requireBm25Safe(n, r.getLong(0), r.getLong(1))
-      r.getLong(0)
-    }
+    docLens(spark, dir, appended = true)
 
   /** The BM25 ranking tail over (doc_id, tf, df, dl) rows — shared by
     * the artifact-served form and the direct semantics reference.

@@ -22,32 +22,25 @@ object Sinks {
   /** Partitioned, statistics-friendly parquet write: directory layout by
     * `partitionCols`, rows sorted by `sortCols` WITHIN each output file
     * (parquet row-group min/max stats become selective), at most
-    * `maxRecordsPerFile` rows per file. */
-  def writePartitioned(df: DataFrame, path: String,
-                       partitionCols: Seq[String], sortCols: Seq[String],
-                       maxRecordsPerFile: Long = 1000000L): Unit =
-    df.repartition(partitionCols.map(col): _*)
-      .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partitionCols: _*)
-      .parquet(path)
-
-  /** Append-mode sibling of [[writePartitioned]] — the shape every
-    * index DELTA append must use: shuffle the delta to its partition
-    * dirs FIRST, so each append lands ONE file per touched dir.
-    * Without the repartition, every writer input partition opens a
+    * `maxRecordsPerFile` rows per file. The in-file sort leads with the
+    * partition columns: the partitioned writer requires that ordering
+    * and would otherwise insert its OWN per-partition sort (double work,
+    * and the layout would rest on that sort's stability). The rows are
+    * shuffled to their partition dirs FIRST, which is what an index
+    * DELTA needs under `mode = "append"`: each append lands ONE file
+    * per touched dir. Without the repartition, every writer input partition opens a
     * file in every dir it has a row for — an append fans out to
     * (input partitions × dirs) tiny files, which is both the measured
     * sf1 lsh-append slowdown (32 × 768 file opens) and, compounded
     * per batch, the small-files death of a 100 TB append-maintained
     * index. Row content is untouched — readers see identical data. */
-  def appendPartitioned(df: DataFrame, path: String,
-                        partitionCols: Seq[String], sortCols: Seq[String],
-                        maxRecordsPerFile: Long = 1000000L): Unit =
+  def writePartitioned(df: DataFrame, path: String,
+                       partitionCols: Seq[String], sortCols: Seq[String],
+                       maxRecordsPerFile: Long = 1000000L,
+                       mode: String = "overwrite"): Unit =
     df.repartition(partitionCols.map(col): _*)
       .sortWithinPartitions((partitionCols ++ sortCols).map(col): _*)
-      .write.mode("append")
+      .write.mode(mode)
       .option("maxRecordsPerFile", maxRecordsPerFile)
       .partitionBy(partitionCols: _*)
       .parquet(path)
@@ -189,7 +182,7 @@ object Sinks {
     val li = graft.sources.Tables(spark, dir, "lineitem")
       .select("l_orderkey", "l_linenumber", "l_suppkey", "l_partkey", "l_quantity")
     val maxKey = li.agg(max("l_orderkey")).head().getLong(0) // 1 driver row
-    val cut = maxKey - math.max(1L, maxKey / 10)
+    val cut = graft.operators.Staging.lateCut(maxKey)
     writeZOrdered(li.where(col("l_orderkey") < cut), path,
       "l_suppkey", "l_partkey", numFiles = 16)
     li.where(col("l_orderkey") >= cut)
@@ -197,24 +190,14 @@ object Sinks {
   }
 
   /** OPTIMIZE ZORDER: re-cluster a parquet directory in place —
-    * rewrite z-ordered into a sibling, then the compact() two-rename
-    * swap (crash leaves data intact at one of the three paths, never
-    * half-deleted). At 100 TB this runs per partition directory on an
+    * rewrite z-ordered into a sibling, then the [[rewriteInPlace]]
+    * two-rename swap. At 100 TB this runs per partition directory on an
     * append-fraction trigger — the same amortization contract as the
     * IVF index's centroid-drift refresh. */
   private[graft] def optimizeZOrdered(spark: SparkSession, path: String,
-      colA: String, colB: String, numFiles: Int): Unit = {
-    val base = path.stripSuffix("/")
-    val tmp = base + ".optimize-tmp"
-    val trash = base + ".optimize-old"
-    writeZOrdered(spark.read.parquet(path), tmp, colA, colB, numFiles)
-    graft.Fs.rmRf(new java.io.File(trash)) // stale leftover from a crash
-    java.nio.file.Files.move(java.nio.file.Paths.get(path),
-      java.nio.file.Paths.get(trash))
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      java.nio.file.Paths.get(path))
-    graft.Fs.rmRf(new java.io.File(trash))
-  }
+      colA: String, colB: String, numFiles: Int): Unit =
+    rewriteInPlace(path, "optimize")(
+      writeZOrdered(spark.read.parquet(path), _, colA, colB, numFiles))
 
   /** q_zorder_optimize: the full lakehouse layout lifecycle — cluster,
     * raw-append, re-cluster — then the same selective read as
@@ -272,20 +255,8 @@ object Sinks {
       spark.sparkContext.defaultParallelism)
     val nFiles = math.max(floor,
       math.ceil(totalBytes.toDouble / targetBytes).toInt)
-    val base = path.stripSuffix("/")
-    val tmp = base + ".compact-tmp"
-    val trash = base + ".compact-old"
-    spark.read.parquet(path)
-      .repartition(nFiles).write.mode("overwrite").parquet(tmp)
-    // swap via two renames, never delete-before-move: a crash leaves the
-    // data intact at either `path` or `.compact-old` (+ the new copy at
-    // `.compact-tmp`), not a half-deleted directory
-    graft.Fs.rmRf(new java.io.File(trash)) // stale leftover from a crash
-    java.nio.file.Files.move(java.nio.file.Paths.get(path),
-      java.nio.file.Paths.get(trash))
-    java.nio.file.Files.move(java.nio.file.Paths.get(tmp),
-      java.nio.file.Paths.get(path))
-    graft.Fs.rmRf(new java.io.File(trash))
+    rewriteInPlace(path, "compact")(
+      spark.read.parquet(path).repartition(nFiles).write.mode("overwrite").parquet(_))
     nFiles
   }
 
@@ -303,12 +274,19 @@ object Sinks {
     * [[overwritePartitionsDynamic]] instead of the whole-root swap. */
   def compactPartitioned(spark: SparkSession, path: String,
                          partitionCols: Seq[String], sortCols: Seq[String],
-                         maxRecordsPerFile: Long = 1000000L): Unit = {
+                         maxRecordsPerFile: Long = 1000000L): Unit =
+    rewriteInPlace(path, "compact")(writePartitioned(spark.read.parquet(path), _,
+      partitionCols, sortCols, maxRecordsPerFile))
+
+  /** Rewrite the directory at `path` through `write` into the sibling
+    * `<path>.<tag>-tmp`, then swap it in by two renames, never
+    * delete-before-move: a crash leaves the data intact at `path` or at
+    * `<path>.<tag>-old` (plus the new copy at `-tmp`), never a
+    * half-deleted directory. */
+  private def rewriteInPlace(path: String, tag: String)(write: String => Unit): Unit = {
     val base = path.stripSuffix("/")
-    val tmp = base + ".compact-tmp"
-    val trash = base + ".compact-old"
-    writePartitioned(spark.read.parquet(path), tmp,
-      partitionCols, sortCols, maxRecordsPerFile)
+    val (tmp, trash) = (s"$base.$tag-tmp", s"$base.$tag-old")
+    write(tmp)
     graft.Fs.rmRf(new java.io.File(trash)) // stale leftover from a crash
     java.nio.file.Files.move(java.nio.file.Paths.get(path),
       java.nio.file.Paths.get(trash))

@@ -154,7 +154,7 @@ class SimilaritySpec extends SparkSuiteBase {
     assert(dirs.nonEmpty)
     val multiFile = dirs.count(_.listFiles().count(_.getName.endsWith(".parquet")) > 1)
     assert(multiFile > 0, "no cid partition holds an appended file")
-    // appendPartitioned shuffles the delta to its dirs first, so each
+    // an append shuffles the delta to its dirs first, so each
     // cid dir holds ≤ 2 files (one base write, one delta) — the file
     // count is independent of writer parallelism; without the shuffle
     // an append fans out to (input partitions × dirs) tiny files

@@ -95,8 +95,8 @@ class SourcesSinksSpec extends SparkSuiteBase {
     val dir = tmp("graft_cpart")
     // base + two appends: every lang dir accretes three files
     Sinks.writePartitioned(docs, dir, Seq("lang"), Seq("doc_id"))
-    Sinks.appendPartitioned(docs.where(col("doc_id") % 2 === 0), dir, Seq("lang"), Seq("doc_id"))
-    Sinks.appendPartitioned(docs.where(col("doc_id") % 2 === 1), dir, Seq("lang"), Seq("doc_id"))
+    Sinks.writePartitioned(docs.where(col("doc_id") % 2 === 0), dir, Seq("lang"), Seq("doc_id"), mode = "append")
+    Sinks.writePartitioned(docs.where(col("doc_id") % 2 === 1), dir, Seq("lang"), Seq("doc_id"), mode = "append")
     def langDirs = new java.io.File(dir).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("lang="))
     def fileCounts = langDirs.map(_.listFiles().count(_.getName.endsWith(".parquet")))

@@ -228,7 +228,7 @@ class WinnowSpec extends SparkSuiteBase {
     // so the appended artifact serves the SAME pairs bit-for-bit
     val app = TextOps.winnowDupsAppended(spark, sf)
     assert(app.collect().map(key).toSet === live)
-    val (root, _) = TextOps.stagedAppendedWinnowIndex(spark, sf)
+    val root = TextOps.stagedAppendedWinnowIndex(spark, sf)
     val fgrpDirs = new java.io.File(root).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("fgrp="))
     assert(fgrpDirs.nonEmpty)
