@@ -23,10 +23,7 @@ import graft.sources.Tables
   * reads the standing tables. Each staged table is BIT-IDENTICAL to
   * the projection the consumer used to derive inline (same distinct
   * sets, same integer types; longs and long arrays round-trip parquet
-  * exactly) — except `proja`, which since r16 carries the SAME rows
-  * under the order-preserving dense dict encode (decode restores the
-  * original ids exactly, spec-asserted) — so every consumer's DuckDB
-  * oracle is unchanged.
+  * exactly), so every consumer's DuckDB oracle is unchanged.
   *
   * Artifact layout under one memoized root (keyed on the lineitem
   * data fingerprint — a changed corpus rebuilds):
@@ -44,18 +41,11 @@ import graft.sources.Tables
   *  - `bipw`    (src, dst, w): the bipartite graph weighted by min
   *               l_quantity per pair — q_sssp;
   *  - `sp`      (src, dst): supplier→part DIRECTED distinct — q_hits;
-  *  - `dict`    (id, code): ORDER-PRESERVING dense node dictionary of
-  *               `proj` (r16) — code = rank of id, INT when the node
-  *               count fits (BIGINT past 2^31); the decode side of
-  *               every code-keyed serve;
   *  - `proja`   (src, dst): BOTH-direction edge-grain adjacency of
-  *               `proj` DICTIONARY-ENCODED to dense codes (r16 — every
-  *               peel/propagation round shuffles narrow codes; the
-  *               consumers decode at output, V-grain), written
-  *               BUCKETED+SORTED by src ([[GraphBuckets]]) — q_kcore /
-  *               q_label_prop's round-1 frame and q_degree_dist's
-  *               input, served with no exchange (see the bucketing
-  *               note below);
+  *               `proj` on raw node ids, written BUCKETED+SORTED by
+  *               src ([[GraphBuckets]]) — q_kcore / q_label_prop's
+  *               round-1 frame and q_degree_dist's input, served with
+  *               no exchange (see the bucketing note below);
   *  - `projadj` (src, ns): CSR adjacency arrays of `proj` (both
   *               directions, dst-sorted neighbor lists) — q_node2vec's
   *               per-step join side;
@@ -118,10 +108,8 @@ object GraphIndex {
           .distinct())
       proj.write.mode("overwrite").parquet(s"$root/proj")
 
-      // Overlap pool (guide §2.6) opens EARLY (r16): the two jobs
-      // that need only the lineitem scan start first, so the node-dict
-      // derivation below runs on the main thread while they fill the
-      // machine instead of serializing ahead of everything.
+      // Overlap pool (guide §2.6): the two jobs that need only the
+      // lineitem scan start first, beside the proj-fed jobs below.
       val pool = new Staging.JobPool(8)
       try {
         pool.submit {
@@ -141,78 +129,28 @@ object GraphIndex {
             .write.mode("overwrite").parquet(s"$root/sp")
         }
 
-      // ---- node dictionary (r16; VERDICT r15 #3): ORDER-PRESERVING
-      // dense codes over proj's node set, assigned at INGEST time —
-      // the durable form of the in-serve encode round 15 measured and
-      // rejected (the per-serve dict build + |E| re-key ate the win;
-      // here both are billed once per corpus version, like every other
-      // layout cost in this artifact). Codes are the rank of the node
-      // id (range partitions + local row_number + a GraphBuckets-row
-      // exclusive-offset ledger — the globalRowIds discipline, driver
-      // state bounded to one row per range), so id order ⇔ code order
-      // and labelProp's (count desc, label asc) argmax is preserved
-      // through encode/decode exactly. The r13 kcore_int probe
-      // measured the key-width effect this buys at the 100× grain:
-      // 432.9 → 297.9 s (−31%) from halving key+payload width alone.
-      val nodes = proj.select(col("u").as("id"))
-        .unionAll(proj.select(col("v").as("id"))).distinct()
-        .repartitionByRange(GraphBuckets, col("id"))
-        .select(col("id"), spark_partition_id().as("pid"))
-      val localRn = graft.Engine.cut(nodes.withColumn("rn",
-        row_number().over(org.apache.spark.sql.expressions.Window
-          .partitionBy("pid").orderBy("id")).cast("long") - 1L))
-      val cnts = localRn.groupBy("pid").agg(count(lit(1)).as("c"))
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).sortBy(_._1)
-      var acc = 0L
-      val off = cnts.map { case (p, c) => val o = acc; acc += c; p -> o }.toMap
-      val nNodes = acc
-      // narrowest code width that fits the node count (INT halves every
-      // per-round shuffle/working-set byte of the iterative serves; a
-      // corpus beyond 2^31 nodes keeps LONG codes — same pipeline, the
-      // width travels in the schema sidecar the serve declares from)
-      val (castT, sqlT) =
-        if (nNodes < Int.MaxValue.toLong) ("int", "INT") else ("long", "BIGINT")
-      val offCol = element_at(
-        typedLit(if (off.isEmpty) Map(0 -> 0L) else off), col("pid"))
-      val dict = graft.Engine.cut(localRn.select(col("id"),
-        (col("rn") + offCol).cast(castT).as("code")))
-      graft.Engine.free(localRn)
-
-        // The remaining tables have no mutual dependencies once proj,
-        // dict and bip are materialized (all lineage-cut). Job order
+        // The remaining tables have no mutual dependencies once proj
+        // and bip are materialized (both lineage-cut). Job order
         // preserves every data dependency: proja/stats/projadj read
-        // only proj(+dict); bipd/walks read only bip. Failure
-        // semantics live in [[Staging.JobPool]]: siblings are drained
-        // before the first failure propagates, the pool always dies.
+        // only proj; bipd/walks read only bip. Failure semantics live
+        // in [[Staging.JobPool]]: siblings are drained before the
+        // first failure propagates, the pool always dies.
         pool.submit {
-          // both-direction CODE-keyed edge-grain adjacency, bucketed by
-          // src: the kcore/labelProp round-1 frame and degreeDist's
-          // input, served with no exchange. The two |E|-grain dict
-          // joins are the ingest-time re-key paid once per corpus
-          // version; serves pay only the V-grain decode join at output.
-          val enc = proj
-            .join(dict.select(col("id").as("u"), col("code").as("cu")), "u")
-            .join(dict.select(col("id").as("v"), col("code").as("cv")), "v")
-            .select(col("cu"), col("cv"))
+          // both-direction edge-grain adjacency, bucketed by src: the
+          // kcore/labelProp round-1 frame and degreeDist's input,
+          // served with no exchange
           bucketWrite(
-            enc.select(col("cu").as("src"), col("cv").as("dst"))
-              .unionAll(enc.select(col("cv").as("src"), col("cu").as("dst"))),
+            proj.select(col("u").as("src"), col("v").as("dst"))
+              .unionAll(proj.select(col("v").as("src"), col("u").as("dst"))),
             root, "proja")
-          java.nio.file.Files.writeString(
-            java.nio.file.Paths.get(s"$root/proja/_graft_schema"),
-            s"src $sqlT, dst $sqlT")
         }
         pool.submit {
-          // the (id, code) dictionary itself — the serves' decode side
-          dict.write.mode("overwrite").parquet(s"$root/dict")
-        }
-        pool.submit {
-          // 1-row projection stats (kcore's k = f(avg degree) inputs);
-          // n is the dict ledger's total — the build no longer pays a
-          // second endpoint-distinct job for it
+          // 1-row projection stats (kcore's k = f(avg degree) inputs)
+          val n = proj.select(col("u").as("x"))
+            .unionAll(proj.select(col("v").as("x"))).distinct().count()
           val m = proj.count()
           spark.range(1)
-            .select(lit(nNodes).as("n"), lit(m).as("m"))
+            .select(lit(n).as("n"), lit(m).as("m"))
             .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
         }
         pool.submit {
@@ -258,7 +196,6 @@ object GraphIndex {
             .write.mode("overwrite").parquet(s"$root/walks")
         }
         pool.await()
-        graft.Engine.free(dict) // consumers read $root/dict from disk
       } finally pool.drainQuiet()
     }
     root
@@ -338,25 +275,12 @@ object GraphIndex {
       "src BIGINT, ns ARRAY<BIGINT>")
 
   /** Both-direction edge-grain adjacency of `proj` — the rows of
-    * `(u,v) ∪ (v,u)` DICTIONARY-ENCODED to dense order-preserving
-    * codes (r16; decode via [[dict]]), served as a bucketed-by-src
-    * scan (HashPartitioning(src, [[GraphBuckets]]), no exchange on the
-    * round-1 join/agg of kcore/labelProp/degreeDist). The code width
-    * (INT, or BIGINT past 2^31 nodes) is a physical property of the
-    * files, recorded at build time in the schema sidecar. */
-  private[graft] def projEdges(spark: SparkSession, dir: String): DataFrame = {
-    val root = stagedGraph(spark, dir)
-    val schema = scala.util.Try(java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$root/proja/_graft_schema")).trim).toOption
-    require(schema.isDefined,
-      s"bucketed artifact $root/proja has no schema sidecar — rebuild")
-    bucketedTable(spark, root, "proja", schema.get)
-  }
-
-  /** (id BIGINT, code INT|BIGINT) order-preserving node dictionary of
-    * `proj` — the decode side of every code-keyed serve. */
-  private[graft] def dict(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${stagedGraph(spark, dir)}/dict")
+    * `(u,v) ∪ (v,u)` on raw node ids, served as a bucketed-by-src scan
+    * (HashPartitioning(src, [[GraphBuckets]]), no exchange on the
+    * round-1 join/agg of kcore/labelProp/degreeDist). */
+  private[graft] def projEdges(spark: SparkSession, dir: String): DataFrame =
+    bucketedTable(spark, stagedGraph(spark, dir), "proja",
+      "src BIGINT, dst BIGINT")
 
   private[graft] def bip(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"${stagedGraph(spark, dir)}/bip")

@@ -859,7 +859,7 @@ object Graphs {
   }
 
   def labelProp(spark: SparkSession, dir: String): DataFrame = {
-    // the staged both-direction adjacency arrives bucketed by src —
+    // the staged raw-id both-direction adjacency arrives bucketed by src —
     // round 1's scope/label joins and the degree-grain aggregates plan
     // with no |E| exchange (VERDICT r13 #1). Raw scan even though LPA
     // references adj ~2x per round: the persist() A/B lost BADLY at
@@ -867,19 +867,7 @@ object Graphs {
     // evicts the working set the rounds need; the re-scan is a
     // page-cache columnar read) and the scales where persist wins are
     // the scales where the whole serve is seconds anyway.
-    // r16: the artifact is CODE-keyed (GraphIndex dict — ingest-time
-    // encode, VERDICT r15 #3): every per-round shuffle/aggregate runs
-    // on narrow dense codes; the argmax winner is unchanged because
-    // codes are order-preserving in the node id. Two V-grain decode
-    // joins at output restore original ids (sf10 same-window A/B in
-    // OPTIMIZATION_r16.md).
-    val lab = labelPropAdj(GraphIndex.projEdges(spark, dir), LpaRounds)
-    val d = GraphIndex.dict(spark, dir)
-    lab.join(d.select(col("code").as("nc"), col("id").as("norig")),
-        col("node") === col("nc"))
-      .join(d.select(col("code").as("lc"), col("id").as("lorig")),
-        col("lbl") === col("lc"))
-      .select(col("norig").as("node"), col("lorig").as("lbl"))
+    labelPropAdj(GraphIndex.projEdges(spark, dir), LpaRounds)
   }
 
   /** df form: deduplicated undirected (u, v) edges, u < v, no
@@ -912,9 +900,8 @@ object Graphs {
 
   /** Round core over a src-laid-out both-direction adjacency (bucketed
     * artifact scan from the catalog, cut repartition from the df
-    * form). `private[graft]` so the graph_enc probe can drive the SAME
-    * core over a dictionary-encoded adjacency (VERDICT r14 #3). */
-  private[graft] def labelPropAdj(adj: DataFrame, rounds: Int): DataFrame = {
+    * form). */
+  private def labelPropAdj(adj: DataFrame, rounds: Int): DataFrame = {
     var labels = graft.Engine.cut(
       adj.select(col("src").as("node")).distinct()
         .withColumn("lbl", col("node")))
@@ -1016,21 +1003,12 @@ object Graphs {
     // jobs over the edge list at serve time
     val (n, m) = GraphIndex.projStats(spark, dir)
     val avg = 2L * m / n
-    // the staged both-direction adjacency arrives bucketed by src —
+    // the staged raw-id both-direction adjacency arrives bucketed by src —
     // round 1's degree agg and semi-joins plan with no |E| exchange
     // (VERDICT r13 #1); raw scan, not persist()ed (the pageRank
     // persist-rejection note: sf10 kcore 209.6 → 291.3 s persisted).
-    // r16: the artifact is CODE-keyed (GraphIndex dict — ingest-time
-    // encode, VERDICT r15 #3): every peel round shuffles narrow dense
-    // codes instead of long original ids (the r13 kcore_int −31%
-    // key-width effect, now billed at ingest); peeling is order-free,
-    // so only the V-grain decode join at output restores ids.
-    val core = kcoreAdj(GraphIndex.projEdges(spark, dir), KcoreRounds,
+    kcoreAdj(GraphIndex.projEdges(spark, dir), KcoreRounds,
       (3L * avg / 4L).toInt)
-    val d = GraphIndex.dict(spark, dir)
-    core.join(d.select(col("code").as("nc"), col("id").as("norig")),
-        col("node") === col("nc"))
-      .select(col("norig").as("node"), col("deg"))
   }
 
   /** df form: deduplicated undirected (u, v) edges, u < v, no
@@ -1055,9 +1033,8 @@ object Graphs {
 
   /** Peel core over a src-laid-out both-direction adjacency (bucketed
     * artifact scan from the catalog, cut repartition from the df
-    * form). `private[graft]` so the graph_enc probe can drive the SAME
-    * core over a dictionary-encoded adjacency (VERDICT r14 #3). */
-  private[graft] def kcoreAdj(adjIn: DataFrame, rounds: Int, k: Int): DataFrame = {
+    * form). */
+  private def kcoreAdj(adjIn: DataFrame, rounds: Int, k: Int): DataFrame = {
     var adj = adjIn
     var realized = 0
     var converged = false

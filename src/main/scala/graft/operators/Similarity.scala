@@ -481,7 +481,7 @@ object Similarity {
       .withColumn("probe", explode(expr("transform(dsrt, s -> s.cid)")))
       .drop("dsrt", "eq")
     val probeCids = q.select(col("probe")).distinct().collect()
-      .map(_.getInt(0).asInstanceOf[AnyRef])
+      .map(_.getInt(0).asInstanceOf[AnyRef]).toIndexedSeq
     val corpus = spark.read.parquet(path)
       .where(col("cid").isin(probeCids: _*)) // static PartitionFilters
     val scored = broadcast(q).as("q").join(corpus.as("c"),
@@ -1035,7 +1035,7 @@ object Similarity {
     val v = vecsQ(spark, dir)
     val q = ivfpqProbeLuts(v, centsDf(spark, cents), cents, books, probes)
     val probeCids = q.select(col("probe")).distinct().collect()
-      .map(_.getInt(0).asInstanceOf[AnyRef])
+      .map(_.getInt(0).asInstanceOf[AnyRef]).toIndexedSeq
     val enc = spark.read.parquet(path)
       .where(col("cid").isin(probeCids: _*)) // static PartitionFilters
     val scored = broadcast(q).join(enc,

@@ -908,7 +908,7 @@ object Streams {
         StructType(Seq(StructField("doc_id", LongType),
           StructField("dup_of", LongType),
           StructField("keep", org.apache.spark.sql.types.BooleanType))))
-    else spark.read.parquet(res: _*)
+    else spark.read.parquet(res.toIndexedSeq: _*)
   }
 
   /** Batch-N directory listing, strictly below `below`: an
@@ -994,7 +994,8 @@ object Streams {
           val pb = batchParts(bandsDir, batchId)
           val ps = batchParts(shDir, batchId)
           if (pb.isEmpty) None
-          else Some((spark.read.parquet(pb: _*), spark.read.parquet(ps: _*)))
+          else Some((spark.read.parquet(pb.toIndexedSeq: _*),
+            spark.read.parquet(ps.toIndexedSeq: _*)))
       }
     // candidates: against the persisted index (cross) + within-batch
     // (self) — disjoint pair spaces, no dedupe needed
@@ -1113,7 +1114,7 @@ object Streams {
           if (prev.exists())
             pfx.join(spark.read.parquet(prev.getAbsolutePath),
                 Seq("event_type"), "left")
-              .select(pfx.columns.map(col) :+
+              .select(pfx.columns.toIndexedSeq.map(col) :+
                 (col("bn") + coalesce(col("pn"), lit(0L))).as("n") :+
                 (col("bs") + coalesce(col("ps"), lit(0L))).as("s") :+
                 (col("bs2") + coalesce(col("ps2"), lit(0L))).as("s2"): _*)

@@ -19,7 +19,8 @@ class GraphIndexSpec extends SparkSuiteBase {
 
   test("artifact layout: all staged graph tables exist under one root") {
     val root = GraphIndex.stagedGraph(spark, sf)
-    for (t <- Seq("op", "proj", "stats", "projadj", "bip", "bipw", "sp", "walks"))
+    for (t <- Seq("op", "proj", "stats", "proja", "projadj", "bip", "bipd",
+        "bipw", "sp", "walks"))
       assert(new java.io.File(root, t).isDirectory, s"missing staged table $t")
   }
 
@@ -52,25 +53,11 @@ class GraphIndexSpec extends SparkSuiteBase {
     val proj = GraphIndex.proj(spark, sf)
     val projaInline = proj.select(col("u").as("src"), col("v").as("dst"))
       .unionAll(proj.select(col("v").as("src"), col("u").as("dst")))
-    // proja is CODE-keyed (r16 ingest-time dict encode): decoded
-    // through the dict it must be row-identical to the inline
-    // derivation on original ids
-    val d = GraphIndex.dict(spark, sf)
-    val decoded = GraphIndex.projEdges(spark, sf)
-      .join(d.select(col("code").as("src"), col("id").as("s0")), "src")
-      .join(d.select(col("code").as("dst"), col("id").as("d0")), "dst")
-      .select(col("s0").as("src"), col("d0").as("dst"))
-    assert(rows(decoded) === rows(projaInline))
-    // the dict is an order-preserving dense bijection over proj's
-    // node set: codes are 0..n-1 and code order == id order (what
-    // keeps labelProp's argmax identical through encode/decode)
-    val dRows = d.orderBy("code").collect()
-      .map(r => (r.getLong(0), r.get(1).asInstanceOf[Number].longValue))
-    val nodesInline = proj.select(col("u").as("x"))
-      .unionAll(proj.select(col("v").as("x"))).distinct()
-      .orderBy("x").collect().map(_.getLong(0))
-    assert(dRows.map(_._2).toSeq === (0L until nodesInline.length).toSeq)
-    assert(dRows.map(_._1).toSeq === nodesInline.toSeq)
+    val proja = GraphIndex.projEdges(spark, sf)
+    assert(rows(proja) === rows(projaInline))
+    // raw node ids, the same fixed width as every other graph table
+    assert(proja.schema.map(f => f.name -> f.dataType.sql) ===
+      Seq("src" -> "BIGINT", "dst" -> "BIGINT"))
   }
 
   test("bucketed artifact: round-1 join and degree agg plan exchange-free on the edge side") {
@@ -145,6 +132,9 @@ class GraphIndexSpec extends SparkSuiteBase {
       rows(Graphs.kcore(projInline, Graphs.KcoreRounds, k)))
     assert(rows(Graphs.labelProp(spark, sf)) ===
       rows(Graphs.labelProp(projInline, Graphs.LpaRounds)))
+    // degreeDist serves from the same staged adjacency
+    assert(rows(Graphs.degreeDist(spark, sf)) ===
+      rows(Graphs.degreeDist(projInline)))
     // early-exit telemetry was populated by the runs above
     assert(Graphs.lastKcoreRounds >= 0 && Graphs.lastKcoreRounds <= Graphs.KcoreRounds)
     assert(Graphs.lastLpaRounds >= 0 && Graphs.lastLpaRounds <= Graphs.LpaRounds)

@@ -66,7 +66,7 @@ class SimilaritySpec extends SparkSuiteBase {
     cents(100) = cents(7).clone()
     val rows = (1 to 300).map(i => (i.toLong, vec()))
     val df = rows.toDF("vec_id", "eq")
-    val declarative = array_sort(array(cents.zipWithIndex.map { case (c, i) =>
+    val declarative = array_sort(array(cents.toIndexedSeq.zipWithIndex.map { case (c, i) =>
       struct(graft.functions.VectorExprs.sqDistLong(col("eq"), lit(c)).as("d2"),
         lit(i).as("cid"))
     }: _*))
