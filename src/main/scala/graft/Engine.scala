@@ -138,6 +138,17 @@ object Engine {
       .map(_.asInstanceOf[Number].longValue)
   }
 
+  /** Size gate for the small side of an iterative join: true when
+    * `rows` rows of `rowBytes` each fit the session's
+    * `spark.sql.autoBroadcastJoinThreshold` (-1 turns broadcasting
+    * off). `rows` is an OBSERVED count — a metric of the cut that
+    * materialized the side — never a plan estimate, so a side that
+    * grows past the threshold falls back to its shuffled plan. */
+  def broadcastFits(spark: SparkSession, rows: Long, rowBytes: Long): Boolean = {
+    val limit = spark.sessionState.conf.autoBroadcastJoinThreshold
+    limit >= 0 && rows <= limit / rowBytes
+  }
+
   /** Latched false after the first [[observedLong]] miss on this JVM —
     * if one materialization path failed to deliver observe metrics,
     * later rounds should not each re-pay the full wait. */

@@ -323,17 +323,6 @@ object Dedup {
     scorePairs(sh, inter, tau)
   }
 
-  /** Exact-Jaccard verification against an EXPLICIT shingle table
-    * (persisted base index ∪ freshly-shingled delta) instead of
-    * re-shingling documents (VERDICT r7 #1): the candidate doc-id list
-    * (bounded by the new pairs — tiny next to the corpus) is
-    * broadcast-semi-joined onto the shingle table first, so everything
-    * downstream of the index scan — the intersection join, the size
-    * aggregate, the scoring — is |candidate docs|-bound, and the
-    * append path never recomputes full-corpus shingles. Pruning by DOC
-    * keeps every candidate's shingle set complete, so sizes,
-    * intersections, and the output are identical to `verifyCandidates`
-    * over the same documents. */
   /** Exact-Jaccard verification of candidate pairs against a DOC-GRAIN
     * shingle-ARRAY table (round 13, the online path's verify): the
     * candidate pair set is broadcast against TWO map-side scans of the
@@ -342,10 +331,13 @@ object Dedup {
     * per-pair count aggregate, no separate size lookups, so the whole
     * verify + downstream result join executes as ONE job (the
     * per-micro-batch job COUNT was q_stream_neardup's measured floor,
-    * VERDICT r12 #3). Bit parity with [[verifyCandidatesIndexed]]:
-    * per-doc arrays are distinct sets, so |array_intersect| equals the
-    * exploded intersection count, sizes equal the group counts, and
-    * the double division has identical long operands.
+    * VERDICT r12 #3). Bit parity with [[verifyCandidates]]' exploded
+    * form: per-doc arrays are distinct sets, so |array_intersect|
+    * equals the exploded intersection count, sizes equal the group
+    * counts, and the double division has identical long operands.
+    * Only the candidate docs' arrays ever reach the intersection, so
+    * against a persisted array index the verify is |candidate
+    * docs|-bound — the append paths never re-shingle the corpus.
     *
     * The broadcast side is the CANDIDATE PAIR set (+ the da-side
     * arrays on the second join) — bounded by the per-batch band
@@ -365,24 +357,6 @@ object Dedup {
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .where(col("jac") >= tau)
       .select(col("da"), col("db"), col("jac"))
-  }
-
-  private[graft] def verifyCandidatesIndexed(sh: DataFrame, cands: DataFrame,
-                                      tau: Double,
-                                      materializePruned: Boolean = false): DataFrame = {
-    val candIds = cands.select(col("da").as("doc_id"))
-      .unionAll(cands.select(col("db").as("doc_id"))).distinct()
-    val pruned0 = sh.join(broadcast(candIds), Seq("doc_id"), "left_semi")
-    // the pruned shingle table has 4 consumers (both sides of the
-    // intersection join + both size lookups in scorePairs); in the
-    // executed path it is materialized ONCE — bounded by candidate
-    // docs — instead of re-running the scan+semi-join per consumer
-    val pruned = if (materializePruned) pruned0.localCheckpoint() else pruned0
-    val inter = cands
-      .join(pruned.select(col("doc_id").as("da"), col("shingle")), "da")
-      .join(pruned.select(col("doc_id").as("db"), col("shingle")), Seq("db", "shingle"))
-      .groupBy("da", "db").agg(count(lit(1)).as("inter"))
-    scorePairs(pruned, inter, tau)
   }
 
   /** Per-token 60-bit hash: the first 15 hex digits of md5 — computable
@@ -717,12 +691,15 @@ object Dedup {
     * propagation needs diameter rounds — fatal on chain-shaped
     * components (a mutual-kNN graph, q_knn_graph, builds exactly
     * those); the shortcut hop doubles propagation distance per round,
-    * so rounds ≈ log₂(diameter). Each round is two joins + one
+    * so rounds ≈ log₂(diameter). Each round is two joins against the
+    * node-grain labels (broadcast while their observed row count fits
+    * the broadcast threshold, [[graft.Engine.broadcastFits]]) + one
     * partial/final min-agg, lineage cut per round with Engine.cut
-    * (reliable-checkpoint knob: SPARK_GRAFT_CHECKPOINT_DIR). The
-    * shortcut preserves the invariant that L(v) names a node of v's
-    * own component (initially L(v)=v; both the neighbor pull and the
-    * L(L(v)) hop stay inside the component), so the fixpoint —
+    * (reliable-checkpoint knob: SPARK_GRAFT_CHECKPOINT_DIR) and the
+    * superseded round freed. The shortcut preserves the invariant
+    * that L(v) names a node of v's own component (initially L(v)=v;
+    * both the neighbor pull and the L(L(v)) hop stay inside the
+    * component), so the fixpoint —
     * nothing changed — is exactly "every node holds its component
     * min". Driver state is one Boolean (converged?). The dup GRAPH
     * (pairs) is orders of magnitude smaller than the corpus at any
@@ -731,9 +708,17 @@ object Dedup {
     val edges = pairs.select(col("da").as("u"), col("db").as("v"))
       .unionAll(pairs.select(col("db").as("u"), col("da").as("v")))
       .transform(graft.Engine.cut(_))
+    val nodes = org.apache.spark.sql.Observation()
     var labels = edges.select(col("u").as("node")).distinct()
       .withColumn("comp", col("node"))
+      .observe(nodes, count(lit(1)).as("rows"))
       .transform(graft.Engine.cut(_))
+    // the labels side is V-grain with a FIXED row count (one label per
+    // node, every round): broadcast it while that observed size fits
+    // the session's threshold; past it, the shuffled plan
+    val fits = graft.Engine.observedLong(nodes, "rows")
+      .exists(graft.Engine.broadcastFits(pairs.sparkSession, _, 16L))
+    val side: DataFrame => DataFrame = if (fits) broadcast(_) else identity
     var it = 0
     var converged = false
     while (!converged && it < maxIter) {
@@ -754,11 +739,11 @@ object Dedup {
       val hopLegs =
         if (it == 0) Nil
         else Seq(labels.as("a")
-          .join(labels.select(col("node").as("ln"), col("comp").as("lc")),
+          .join(side(labels.select(col("node").as("ln"), col("comp").as("lc"))),
             col("a.comp") === col("ln"))
           .select(col("a.node").as("u"), col("lc").as("comp"),
             lit(0L).as("own")))
-      val next = (edges.join(labels, col("v") === col("node"))
+      val next = (edges.join(side(labels), col("v") === col("node"))
         .select(col("u"), col("comp"), lit(0L).as("own")) +:
         hopLegs).reduce(_.unionAll(_))
         .unionAll(labels.select(col("node").as("u"), col("comp"),
@@ -772,9 +757,13 @@ object Dedup {
         .transform(graft.Engine.cut(_))
       converged = Option(obs.get("changed"))
         .forall(_.asInstanceOf[Long] == 0L)
+      // the superseded round's blocks are dead once `next` is
+      // materialized
+      graft.Engine.free(labels)
       labels = next
       it += 1
     }
+    graft.Engine.free(edges)
     // fail loudly rather than return silently-wrong labels: iterations
     // needed ≈ component diameter, so a hit here means pathologically
     // chained dups — raise maxIter, don't trust partial propagation
@@ -820,21 +809,25 @@ object Dedup {
   // verbatim (recursive closure over exhaustive J ≥ 0.8 pairs of the
   // full corpus). Spec'd additionally via the df-form parity seam.
   //
-  // The verification stage joins candidates against the SHINGLE INDEX
-  // persisted beside the bands (plus the delta's freshly-computed
-  // shingles), so per-batch verify cost is |candidate docs|-bound —
+  // The verification stage joins candidates against the doc-grain
+  // SHINGLE-ARRAY index persisted beside the bands (plus the delta's
+  // freshly-computed arrays — the same tokenization its signatures
+  // came from), so per-batch verify cost is |candidate docs|-bound —
   // the append path never re-shingles the corpus (VERDICT r7 #1).
 
-  /** Staged base-corpus band index + SHINGLE index + verified base pair
-    * list, memoized per (dir, data fingerprint); returns (root, cut,
-    * deltaDocs). The base/batch split mirrors
+  /** Staged base-corpus band index + shingle-ARRAY index + verified
+    * base pair list, memoized per (dir, data fingerprint); returns
+    * (root, cut, deltaDocs). The base/batch split mirrors
     * `Similarity.stagedAppendedIndex`: the last ~10% of doc ids arrive
-    * "late" — the index genuinely never sees them. The shingle index
-    * rides beside the bands so the per-batch exact-verify stage joins
-    * candidates against it instead of re-shingling the corpus;
-    * range-layout on doc_id gives every file/row-group tight min/max
-    * stats, so at 100 TB the candidate semi-join reads only the index
-    * slices holding candidate docs. */
+    * "late" — the index genuinely never sees them. The array index
+    * (`sharr`: one (doc_id, sharr) row per base doc,
+    * [[shingleArrays]]) rides beside the bands so the per-batch
+    * exact-verify stage joins candidates against it instead of
+    * re-shingling the corpus — at doc grain, so the verify is one
+    * `array_intersect` per pair ([[verifyCandidatesArrays]]) with no
+    * shingle-row shuffle; range-layout on doc_id gives every
+    * file/row-group tight min/max stats, so at 100 TB the candidate
+    * join reads only the index slices holding candidate docs. */
   private[graft] def stagedBandIndex(spark: SparkSession, dir: String): (String, Long, Long) = {
     val (root, (cut, deltaDocs)) = Artifacts.staged(Artifacts.Index, "bandidx", dir, "documents") { root =>
       val n = Staging.rows(spark, dir, "documents")
@@ -855,9 +848,9 @@ object Dedup {
             sigBands(base).write.mode("overwrite").parquet(s"$root/bands")
           }
           pool.submit {
-            shingles(base).repartitionByRange(col("doc_id"))
+            shingleArrays(base).repartitionByRange(col("doc_id"))
               .sortWithinPartitions("doc_id")
-              .write.mode("overwrite").parquet(s"$root/shingles")
+              .write.mode("overwrite").parquet(s"$root/sharr")
           }
           pool.submit {
             minhashLsh(base).write.mode("overwrite").parquet(s"$root/pairs")
@@ -874,8 +867,9 @@ object Dedup {
     * from the persisted band index — the plan the scale argument is
     * about (batch bands broadcast below the size gate; index scanned
     * map-side, no index shuffle; verification candidate-bound via the
-    * persisted shingle index — the only documents scans in the plan
-    * are the delta's), exposed for the plan spec because
+    * persisted shingle-array index — the only documents scan in the
+    * plan is the delta's, tokenized ONCE for both its signatures and
+    * its verify arrays), exposed for the plan spec because
     * `dedupAppend`'s returned labels sit behind the CC loop's lineage
     * cuts.
     *
@@ -886,26 +880,29 @@ object Dedup {
     * localCheckpoint — the bpeEncode multi-consumer pattern, with
     * accurate sizes for AQE unlike .cache()'s inflated stats. Left
     * declarative, the shared subtrees re-evaluate per consumer (the
-    * delta band table feeds the cross probe plus both sides of the
-    * batch-local self-join; candidate/pruned tables fan out 2-4×
-    * each), multiplying to ~12 delta re-signatures per run — measured
-    * 12.4 s vs ~4 s at sf0.1. Checkpointed sizes are all batch- or
-    * dup-graph-bounded: |delta|·32 band rows, candidate pairs,
-    * candidate docs' shingles. */
+    * delta arrays feed the signatures and the verify; the delta band
+    * table feeds the cross probe plus both sides of the batch-local
+    * self-join), multiplying delta re-signatures per run — measured
+    * 12.4 s vs ~4 s at sf0.1 when it was ~12 of them. Checkpointed
+    * sizes are all batch- or dup-graph-bounded: |delta| arrays,
+    * |delta|·32 band rows, candidate pairs. The staged tables are read
+    * with their declared schemas: a schema-less parquet read pays a
+    * footer-inference job of its own. */
   private[graft] def appendProbe(spark: SparkSession, dir: String,
                                  exec: Boolean = false): DataFrame = {
     val (root, cut, deltaDocs) = stagedBandIndex(spark, dir)
     val mat: DataFrame => DataFrame =
       if (exec) df => df.localCheckpoint() else identity
     val docs = Tables(spark, dir, "documents")
-    val delta = docs.where(col("doc_id") >= cut)
-    val deltaBands = mat(sigBands(delta))
-    val newCands = mat(crossCandidates(spark.read.parquet(s"$root/bands"),
+    val deltaArr = mat(shingleArrays(docs.where(col("doc_id") >= cut)))
+    val deltaBands = mat(sigBandsFromArrays(deltaArr))
+    val newCands = mat(crossCandidates(
+        spark.read.schema("doc_id BIGINT, band INT, bh INT").parquet(s"$root/bands"),
         deltaBands, deltaDocs * Bands)
       .unionAll(lshCandidates(deltaBands))) // disjoint pair spaces: no distinct
-    verifyCandidatesIndexed(
-      spark.read.parquet(s"$root/shingles").unionByName(shingles(delta)),
-      newCands, 0.8, materializePruned = exec)
+    verifyCandidatesArrays(
+      spark.read.schema("doc_id BIGINT, sharr ARRAY<BIGINT>").parquet(s"$root/sharr")
+        .unionByName(deltaArr), newCands, 0.8)
   }
 
   /** North-star q_dedup_append: connected components of the dup graph,
@@ -913,19 +910,21 @@ object Dedup {
     * above). Output ≡ q_dedup_cc bit-for-bit. */
   def dedupAppend(spark: SparkSession, dir: String): DataFrame = {
     val (root, _, _) = stagedBandIndex(spark, dir)
-    dupComponents(spark.read.parquet(s"$root/pairs")
+    dupComponents(spark.read.schema("da BIGINT, db BIGINT, jac DOUBLE").parquet(s"$root/pairs")
       .unionAll(appendProbe(spark, dir, exec = true)))
   }
 
   /** df-form parity seam (no persistence): incremental components from
     * an explicit (base, delta) split — what the staged catalog form
     * must agree with, and the spec's crafted-corpus surface. Routes
-    * through the same indexed-verify code path as `appendProbe` (the
-    * shingle table here is computed, not persisted — the seam proves
+    * through the same doc-grain verify as `appendProbe` (the array
+    * table here is computed, not persisted — the seam proves
     * SEMANTICS, the staged form proves the plan). */
   private[graft] def dedupAppend(base: DataFrame, delta: DataFrame): DataFrame = {
-    val baseBands = sigBands(base)
-    val deltaBands = sigBands(delta)
+    val baseArr = shingleArrays(base)
+    val deltaArr = shingleArrays(delta)
+    val baseBands = sigBandsFromArrays(baseArr)
+    val deltaBands = sigBandsFromArrays(deltaArr)
     val basePairs = verifyCandidates(base, lshCandidates(baseBands), 0.8)
     // spec-scale seam: always broadcast (0 ≤ gate) rather than paying
     // an eager count() job on an arbitrary caller frame at
@@ -933,8 +932,8 @@ object Dedup {
     // with the batch size known from staging metadata
     val newCands = crossCandidates(baseBands, deltaBands, 0L)
       .unionAll(lshCandidates(deltaBands))
-    val newPairs = verifyCandidatesIndexed(
-      shingles(base).unionByName(shingles(delta)), newCands, 0.8)
+    val newPairs = verifyCandidatesArrays(
+      baseArr.unionByName(deltaArr), newCands, 0.8)
     dupComponents(basePairs.unionAll(newPairs))
   }
 
@@ -1222,8 +1221,9 @@ object Dedup {
     * ~(1−τ) of each document's tokens (~20% of index rows at τ=4/5;
     * measured on the fixture: 5.5k of 26k shingle rows, and the 25
     * candidates were exactly the 25 true pairs — zero wasted
-    * verifications). Verification is |candidate docs|-bound via the
-    * same broadcast-semi-join pruning as [[verifyCandidatesIndexed]].
+    * verifications). Verification is |candidate docs|-bound: the
+    * shingle index is broadcast-semi-joined to the candidate doc ids
+    * before any intersection ([[ssjoinVerify]]).
     * Output: (da, db, inter, na, nb, jacc_micro) — all BIGINT, the
     * Jaccard reported as exact micro-units ((10⁶·i) div u). */
   def ssjoin(spark: SparkSession, dir: String): DataFrame =
@@ -1284,10 +1284,9 @@ object Dedup {
   }
 
   /** Exact integer verification: candidate-doc-pruned shingle index →
-    * intersection counts → the integer acceptance predicate. Same
-    * |candidate docs|-bound discipline as [[verifyCandidatesIndexed]],
-    * but the emitted row is the all-BIGINT (inter, na, nb, jacc_micro)
-    * form — no double division anywhere. */
+    * intersection counts → the integer acceptance predicate, emitting
+    * the all-BIGINT (inter, na, nb, jacc_micro) form — no double
+    * division anywhere. */
   private def ssjoinVerify(sh: DataFrame, cands: DataFrame): DataFrame = {
     val candIds = cands.select(col("da").as("doc_id"))
       .unionAll(cands.select(col("db").as("doc_id"))).distinct()

@@ -32,8 +32,9 @@ import graft.sources.Tables
   *  - `proj`    (u, v):  part-part co-purchase projection, u < v,
   *               distinct — q_triangle/_approx, q_label_prop, q_kcore,
   *               q_degree_dist, and the node2vec adjacency input;
-  *  - `stats`   (n, m):  1-row node/edge counts of `proj` — derives
-  *               q_kcore's data-dependent k without two count jobs;
+  *  - `stats`   (n, m):  1-row node/edge counts of `proj` — the same
+  *               pair rides the artifact's memo entry, so q_kcore's
+  *               data-dependent k costs no job at serve time;
   *  - `bip`     (src, dst): part↔supplier bipartite graph, both
   *               directions, distinct (part·2 / supplier·2+1 id
   *               encoding) — q_pagerank, q_ppr, q_bfs, and the walk
@@ -43,9 +44,10 @@ import graft.sources.Tables
   *  - `sp`      (src, dst): supplier→part DIRECTED distinct — q_hits;
   *  - `proja`   (src, dst): BOTH-direction edge-grain adjacency of
   *               `proj` on raw node ids, written BUCKETED+SORTED by
-  *               src ([[GraphBuckets]]) — q_kcore / q_label_prop's
-  *               round-1 frame and q_degree_dist's input, served with
-  *               no exchange (see the bucketing note below);
+  *               src — the frame every q_kcore round re-reads,
+  *               q_label_prop's round-1 frame and q_degree_dist's
+  *               input, served with no exchange (see the bucketing
+  *               note below);
   *  - `projadj` (src, ns): CSR adjacency arrays of `proj` (both
   *               directions, dst-sorted neighbor lists) — q_node2vec's
   *               per-step join side;
@@ -65,31 +67,38 @@ import graft.sources.Tables
   * `bipd` and `proja` — the |E|-grain frames every iterative consumer
   * (pageRank/PPR, kcore, labelProp) joins/aggregates BY src every
   * round — are written as bucketed+sorted tables
-  * (`bucketBy(GraphBuckets, src)`, one file per bucket via an aligned
-  * repartition, the q_join_bucketed machinery). A bucketed scan
-  * reports HashPartitioning(src, buckets), so the round-1 join and the
-  * degree aggregate plan with NO Exchange on the edge side — the
-  * per-serve full-|E| `repartition(src)` the r13 judge measured as the
-  * largest avoidable cost in the graph band (q_pagerank sf10
-  * 11.8×/decade with a one-|E|-pass re-staging in every serve) is now
-  * paid ONCE, at artifact-build time, like every other layout cost in
-  * this engine. The V-grain side (ranks/labels/keep frames) exchanges
-  * per round at |V| grain — |V|·rounds ≪ |E| at any realistic degree.
+  * (`bucketBy(n, src)`, one file per bucket via an aligned
+  * repartition, the q_join_bucketed machinery), n being the building
+  * session's task width (`spark.sql.shuffle.partitions`, one per core
+  * under [[graft.Engine.session]]) recorded beside the files. A
+  * bucketed scan reports HashPartitioning(src, n), so every round is
+  * n tasks — never more than the cores that run them — and the
+  * round-1 join and the degree aggregate plan with NO Exchange on the
+  * edge side — the per-serve full-|E| `repartition(src)` the r13 judge
+  * measured as the largest avoidable cost in the graph band
+  * (q_pagerank sf10 11.8×/decade with a one-|E|-pass re-staging in
+  * every serve) is now paid ONCE, at artifact-build time, like every
+  * other layout cost in this engine. The V-grain side (ranks/labels/keep frames) moves per
+  * round at |V| grain — exchanged, or broadcast where its observed size
+  * fits (kcore's survivors) — |V|·rounds ≪ |E| at any realistic degree.
   * Table names are fingerprint-scoped; a fresh session re-declares the
-  * layout over the bucket files (CREATE TABLE … CLUSTERED BY …
-  * LOCATION — bucket ids live in the file names).
+  * layout over the bucket files at the recorded count (CREATE TABLE …
+  * CLUSTERED BY … LOCATION — bucket ids live in the file names).
   */
 object GraphIndex {
 
-  /** Bucket count of the serve-side |E|-grain tables. Matches the
-    * driver's local[32] task width; on a real cluster size it like
-    * shuffle partitions for the target |E| (buckets are the round-1
-    * parallelism of every iterative serve). */
-  val GraphBuckets = 32
-
   /** Build (or reuse) the staged graph artifact; returns its root. */
-  private[graft] def stagedGraph(spark: SparkSession, dir: String): String = {
-    val (root, _) = Artifacts.staged(Artifacts.Index, "graph", dir, "lineitem") { root =>
+  private[graft] def stagedGraph(spark: SparkSession, dir: String): String =
+    staged(spark, dir)._1
+
+  /** (n, m) of `proj` as driver scalars — the `stats` table's row,
+    * carried in the artifact's memo entry (no job). */
+  private[graft] def projStats(spark: SparkSession, dir: String): (Long, Long) =
+    staged(spark, dir)._2
+
+  /** The memoized artifact: its root and the (n, m) of `proj`. */
+  private def staged(spark: SparkSession, dir: String): (String, (Long, Long)) =
+    Artifacts.staged(Artifacts.Index, "graph", dir, "lineitem") { root =>
       val li = Tables(spark, dir, "lineitem")
 
       // order→part distinct: basket grain, and the projection input
@@ -110,6 +119,7 @@ object GraphIndex {
 
       // Overlap pool (guide §2.6): the two jobs that need only the
       // lineitem scan start first, beside the proj-fed jobs below.
+      var n, m = 0L // set by the stats job, read after the pool drains
       val pool = new Staging.JobPool(8)
       try {
         pool.submit {
@@ -146,9 +156,9 @@ object GraphIndex {
         }
         pool.submit {
           // 1-row projection stats (kcore's k = f(avg degree) inputs)
-          val n = proj.select(col("u").as("x"))
+          n = proj.select(col("u").as("x"))
             .unionAll(proj.select(col("v").as("x"))).distinct().count()
-          val m = proj.count()
+          m = proj.count()
           spark.range(1)
             .select(lit(n).as("n"), lit(m).as("m"))
             .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
@@ -197,20 +207,23 @@ object GraphIndex {
         }
         pool.await()
       } finally pool.drainQuiet()
+      (n, m)
     }
-    root
-  }
 
   /** Write an |E|-grain frame as a bucketed+sorted-by-src external
-    * table under the artifact root. The aligned repartition (same
-    * Murmur3 key mapping as the bucket spec) yields exactly ONE file
-    * per bucket — the q_join_bucketed discipline (Joins.scala). The
-    * bucket count is recorded in a sidecar next to the data: the
-    * layout is a physical property of the FILES, and a later session
-    * re-declaring it must prove it matches (see [[bucketedTable]]). */
+    * table under the artifact root, bucketed at the session's task
+    * width (`spark.sql.shuffle.partitions`): the buckets are the
+    * parallelism of every serve round, and more of them than cores
+    * only adds tasks. The aligned repartition (same Murmur3 key
+    * mapping as the bucket spec) yields exactly ONE file per bucket —
+    * the q_join_bucketed discipline (Joins.scala). The bucket count is
+    * recorded in a sidecar next to the data: the layout is a physical
+    * property of the FILES, and a later session re-declares it from
+    * the sidecar (see [[bucketedTable]]). */
   private[graft] def bucketWrite(df: DataFrame, root: String, sub: String): Unit = {
-    df.repartition(GraphBuckets, col("src"))
-      .write.bucketBy(GraphBuckets, "src").sortBy("src")
+    val buckets = df.sparkSession.sessionState.conf.numShufflePartitions
+    df.repartition(buckets, col("src"))
+      .write.bucketBy(buckets, "src").sortBy("src")
       .option("path", s"$root/$sub")
       .mode("overwrite").saveAsTable(tableName(root, sub))
     // underscore prefix: invisible to Spark's file index, so the scan
@@ -218,7 +231,7 @@ object GraphIndex {
     // same one-line PUT via the Hadoop FS API)
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$root/$sub/_graft_buckets"),
-      GraphBuckets.toString)
+      buckets.toString)
   }
 
   private def tableName(root: String, sub: String): String =
@@ -232,24 +245,21 @@ object GraphIndex {
     *
     * Spark TRUSTS the declared spec — declaring N buckets over files
     * written with M would silently return wrong rows from the
-    * "exchange-free" joins/aggregates. The sidecar [[bucketWrite]]
-    * recorded is therefore REQUIRED to match [[GraphBuckets]] before
-    * the CREATE TABLE is issued: a persisted artifact root outliving a
-    * bucket-count retune fails loudly here instead (rebuild the
-    * artifact, or serve with the artifact's own count). */
+    * "exchange-free" joins/aggregates. The count is therefore the one
+    * [[bucketWrite]] recorded in the sidecar, never the serving
+    * session's own width; a root without a readable sidecar fails
+    * loudly (rebuild the artifact). */
   private[graft] def bucketedTable(spark: SparkSession, root: String, sub: String,
       schema: String): DataFrame = {
     val name = tableName(root, sub)
     if (!spark.catalog.tableExists(name)) {
       val sidecar = java.nio.file.Paths.get(s"$root/$sub/_graft_buckets")
-      val written = scala.util.Try(
-        java.nio.file.Files.readString(sidecar).trim.toInt).toOption
-      require(written.contains(GraphBuckets),
-        s"bucketed artifact $root/$sub was written with " +
-          s"${written.getOrElse("unknown")} buckets but GraphBuckets is " +
-          s"$GraphBuckets — rebuild the artifact before serving")
+      val buckets = scala.util.Try(
+        java.nio.file.Files.readString(sidecar).trim.toInt).getOrElse(
+        throw new IllegalStateException(s"bucketed artifact $root/$sub has no " +
+          "readable bucket-count sidecar — rebuild the artifact before serving"))
       spark.sql(s"CREATE TABLE $name ($schema) USING parquet " +
-        s"CLUSTERED BY (src) SORTED BY (src) INTO $GraphBuckets BUCKETS " +
+        s"CLUSTERED BY (src) SORTED BY (src) INTO $buckets BUCKETS " +
         s"LOCATION '$root/$sub'")
     }
     spark.table(name)
@@ -261,14 +271,8 @@ object GraphIndex {
   private[graft] def proj(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"${stagedGraph(spark, dir)}/proj")
 
-  /** (n, m) of `proj` as driver scalars (1-row artifact read). */
-  private[graft] def projStats(spark: SparkSession, dir: String): (Long, Long) = {
-    val r = spark.read.parquet(s"${stagedGraph(spark, dir)}/stats").head()
-    (r.getAs[Long]("n"), r.getAs[Long]("m"))
-  }
-
   /** CSR adjacency of `proj` — served as a bucketed-by-src scan
-    * (HashPartitioning(src, [[GraphBuckets]]): the node2vec step joins
+    * (HashPartitioning(src, its bucket count): the node2vec step joins
     * build against it exchange-free). */
   private[graft] def projAdj(spark: SparkSession, dir: String): DataFrame =
     bucketedTable(spark, stagedGraph(spark, dir), "projadj",
@@ -276,7 +280,7 @@ object GraphIndex {
 
   /** Both-direction edge-grain adjacency of `proj` — the rows of
     * `(u,v) ∪ (v,u)` on raw node ids, served as a bucketed-by-src scan
-    * (HashPartitioning(src, [[GraphBuckets]]), no exchange on the
+    * (HashPartitioning(src, its bucket count), no exchange on the
     * round-1 join/agg of kcore/labelProp/degreeDist). */
   private[graft] def projEdges(spark: SparkSession, dir: String): DataFrame =
     bucketedTable(spark, stagedGraph(spark, dir), "proja",

@@ -75,10 +75,10 @@ object Graphs {
     * from the staged artifact ([[GraphIndex.bipDegreed]]) and only
     * this core runs per query. `ed` must arrive HASH-LAID-OUT by src —
     * the catalog passes the BUCKETED artifact scan
-    * (HashPartitioning(src, GraphBuckets) straight off the files, so
-    * no serve ever re-pays an |E| exchange — VERDICT r13 #1; the df
-    * form cuts an explicit repartition). Each round's join then plans
-    * exchange-free on the edge side; the V-grain ranks side is the
+    * (HashPartitioning(src, its recorded bucket count) straight off
+    * the files, so no serve ever re-pays an |E| exchange — VERDICT r13
+    * #1; the df form cuts an explicit repartition). Each round's join
+    * then plans exchange-free on the edge side; the V-grain ranks side is the
     * hash-build (the r13 sf1 probe measured the old per-round deg
     * join flipping from broadcast to a full edge-table SMJ past the
     * 10 MB threshold — a 15x/decade ratio on a linear algorithm). */
@@ -993,14 +993,17 @@ object Graphs {
     * would peel everything or nothing). Measured cores: 187/200 nodes
     * at sf0.001 (fixpoint), 1516/2000 at sf0.01, 14459/20000 at sf0.1.
     *
-    * Shape at scale: per round one degree partial/final agg + two
-    * left_semi filters of the edge list — keyed shuffles only, and the
-    * edge list only SHRINKS (peeling is monotone), so round cost is
-    * bounded by the previous round's survivor edges; lineage cut per
-    * round. Driver state: the two scalar counts (n, m) that derive k. */
+    * Shape at scale: per round ONE job — a map-side scan of the
+    * src-laid-out adjacency, two left_semi filters against the
+    * previous survivors (broadcast while their observed size fits the
+    * broadcast threshold, hash-built past it) and a degree agg that
+    * needs no exchange; only the V-grain degree table is cut, so no
+    * edge-grain frame is ever shuffled or materialized (peeling is
+    * monotone: the round-r subgraph is the input restricted to the
+    * round-(r−1) survivors). Driver state: the two scalar counts
+    * (n, m) that derive k, read from the artifact's memo entry. */
   def kcore(spark: SparkSession, dir: String): DataFrame = {
-    // (n, m) come from the artifact's 1-row stats table — no count
-    // jobs over the edge list at serve time
+    // (n, m) come with the staged artifact's memo entry — no job
     val (n, m) = GraphIndex.projStats(spark, dir)
     val avg = 2L * m / n
     // the staged raw-id both-direction adjacency arrives bucketed by src —
@@ -1018,11 +1021,11 @@ object Graphs {
     * subgraph. */
   def kcore(edgesIn: DataFrame, rounds: Int, k: Int): DataFrame = {
     val und = graft.Engine.cut(edgesIn)
-    // pre-partitioned by src: the per-round degree agg and the src-side
-    // semi then run exchange-free (the r13 sf10 confirm measured the
-    // alternative — once `keep` outgrows the broadcast threshold the
-    // semis flip to sort-merge and SORT the |E|-grain frame twice per
-    // round: 35x/decade on a shrinking-linear algorithm)
+    // pre-partitioned by src: the per-round degree agg then runs
+    // exchange-free (the r13 sf10 confirm measured the alternative —
+    // once `keep` outgrows the broadcast threshold the semis flip to
+    // sort-merge and SORT the |E|-grain frame twice per round:
+    // 35x/decade on a shrinking-linear algorithm)
     val adj = graft.Engine.cut(
       und.select(col("u").as("src"), col("v").as("dst"))
         .unionAll(und.select(col("v").as("src"), col("u").as("dst")))
@@ -1033,63 +1036,60 @@ object Graphs {
 
   /** Peel core over a src-laid-out both-direction adjacency (bucketed
     * artifact scan from the catalog, cut repartition from the df
-    * form). */
-  private def kcoreAdj(adjIn: DataFrame, rounds: Int, k: Int): DataFrame = {
-    var adj = adjIn
+    * form). Peeling is monotone — keep_r ⊆ keep_{r−1} — so the
+    * round-r subgraph is exactly adj ∩ keep_{r−1}²: every round
+    * re-reads the UNCHANGED adjacency, semi-joined to the previous
+    * survivors on both endpoints, and cuts only its V-grain (src, d)
+    * degree table. No edge-grain frame is materialized or shuffled. */
+  private def kcoreAdj(adj: DataFrame, rounds: Int, k: Int): DataFrame = {
+    val spark = adj.sparkSession
+    // the last peel's degree table and its observed survivor count (a
+    // lost metric takes the hash-built plan); None = the unpeeled
+    // adjacency
+    var prev: Option[(DataFrame, Option[Long])] = None
     var realized = 0
-    var converged = false
-    for (r <- 1 to rounds if !converged) {
-      // survivors of this peel: degree ≥ k against the CURRENT
-      // subgraph. The global min degree rides the SAME job that
-      // materializes the cut (observe sidecar) — see the early exit.
+    var core: Option[DataFrame] = None
+    // round rounds+1 only cuts the degrees of the last survivors
+    for (r <- 1 to rounds + 1 if core.isEmpty) {
+      val sub = prev.fold(adj) { case (deg, kept) =>
+        // the survivors are the V-grain side: broadcast while their
+        // observed size fits, else hash-built (never sort the edges)
+        val keep = deg.where(col("d") >= k).select(col("src").as("node"))
+        val side =
+          if (kept.exists(graft.Engine.broadcastFits(spark, _, 8L))) broadcast(keep)
+          else keep.hint("shuffle_hash")
+        adj.join(side, col("dst") === col("node"), "left_semi")
+          .join(side, col("src") === col("node"), "left_semi")
+      }
+      // degrees against the current subgraph; the global min degree
+      // and the survivor count ride the SAME job that materializes
+      // the cut (observe sidecar)
       val obs = org.apache.spark.sql.Observation()
       val deg = graft.Engine.cut(
-        adj.groupBy("src").agg(count(lit(1)).as("d"))
-          .observe(obs, min(col("d")).as("mind")))
-      val keep = graft.Engine.cut(
-        deg.where(col("d") >= k).select(col("src")))
+        sub.groupBy("src").agg(count(lit(1)).as("d"))
+          .observe(obs, min(col("d")).as("mind"),
+            sum(when(col("d") >= k, 1L).otherwise(0L)).as("kept")))
+      prev.foreach { case (d, _) => graft.Engine.free(d) }
       // EARLY EXIT (VERDICT r12 #5): if no node falls below k, this
-      // peel — and every remaining one — is a no-op semi-join pass;
-      // the round-`rounds` fixpoint is already in hand, so the result
-      // (and the fixed-round DuckDB oracle) is unchanged. The probe
-      // is the observed global min of the degree aggregate — it costs
-      // NO extra job (VERDICT r13 #6; it used to be a separate
-      // node-grain scan per round); if the metric is ever lost (or
-      // the graph is empty — min of zero rows observes NULL), fall
-      // back to the bounded scan.
-      if (graft.Engine.observedLong(obs, "mind")
+      // peel — and every remaining one — is a no-op and `deg` already
+      // holds the fixpoint's degrees, so the result (and the
+      // fixed-round DuckDB oracle) is unchanged. The probe is the
+      // observed global min — NO extra job (VERDICT r13 #6); if the
+      // metric is ever lost (or the graph is empty — min of zero rows
+      // observes NULL), fall back to a bounded V-grain scan.
+      if (r > rounds || graft.Engine.observedLong(obs, "mind")
             .map(_ >= k).getOrElse(deg.where(col("d") < k).isEmpty))
-        converged = true
+        core = Some(deg)
       else {
         realized = r
-        // drop every edge touching a peeled node (both endpoint
-        // filters). dst first, then src: the round ENDS partitioned
-        // by src, feeding the next degree agg and src-semi without an
-        // exchange; keep is the V-grain hash-BUILD side (never sort
-        // the edge frame — a hash exchange of the shrinking survivor
-        // set is the round's only data movement)
-        val prev = adj
-        adj = graft.Engine.cut(
-          adj.join(keep.withColumnRenamed("src", "dst").hint("shuffle_hash"),
-              Seq("dst"), "left_semi")
-            .join(keep.hint("shuffle_hash"), Seq("src"), "left_semi"))
-        // the superseded round's |E|-grain blocks are dead now that the
-        // new frame is materialized — free them (r13: at sf10 the
-        // accumulated rounds were the k-core slowdown, not the peels)
-        graft.Engine.free(prev)
+        prev = Some(deg -> graft.Engine.observedLong(obs, "kept"))
       }
-      graft.Engine.free(deg)
-      graft.Engine.free(keep)
     }
     lastKcoreRounds = realized
-    // materialize the (small, node-grain) core result so the final
-    // survivor edge frame can be freed NOW rather than when a GC
-    // happens to run the context cleaner (|E|-grain blocks pinned
-    // across subsequent queries were the r13 sf10 band's OOM)
-    val out = graft.Engine.cut(
-      adj.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")))
+    // the df form's staged adjacency is dead (no-op for the bucketed
+    // scan); the result is the V-grain cut above
     graft.Engine.free(adj)
-    out
+    core.get.select(col("src").as("node"), col("d").as("deg"))
   }
 
   /** Peel rounds actually EXECUTED by the last [[kcore]] call on this

@@ -698,13 +698,13 @@ object Pipeline {
   //  - staged once per corpus version (stagedWebState): the base
   //    docs' doc-grain stage flags (c4 dropped / gopher keep /
   //    wp_tokens — text-free), the base survivors' band index, 3-token
-  //    shingle index, verified pair list (the dedupAppend artifacts),
-  //    and their 4-token decontamination shingles;
+  //    shingle-array index, verified pair list (the dedupAppend
+  //    artifacts), and their 4-token decontamination shingles;
   //  - per increment: C4 + Gopher over |delta| docs only; delta
   //    signatures probed AGAINST the persisted band index (batch side
   //    broadcast — one map-side index scan, no index shuffle; the
   //    crossCandidates gate) plus the batch-local LSH; exact-verify
-  //    candidate-bound via the persisted shingle index; components
+  //    candidate-bound via the persisted shingle-array index; components
   //    over base pairs ∪ new pairs (dup-graph grain).
   // The ledger is then recomputed as pure ID-GRAIN set algebra over
   // persisted + delta flags — it must be, for exactness: an increment
@@ -774,7 +774,7 @@ object Pipeline {
             Dedup.sigBands(surv).write.mode("overwrite").parquet(s"$root/bands")
           }
           pool.submit {
-            Dedup.shingles(surv).repartitionByRange(col("doc_id"))
+            Dedup.shingleArrays(surv).repartitionByRange(col("doc_id"))
               .sortWithinPartitions("doc_id")
               .write.mode("overwrite").parquet(s"$root/sh3")
           }
@@ -818,14 +818,15 @@ object Pipeline {
 
     // near-dup: delta bands probe the persisted index (map-side) +
     // batch-local LSH; exact verify candidate-bound via the persisted
-    // shingle index ∪ the delta's fresh shingles
-    val dBands = Dedup.sigBands(dSurv)
+    // shingle-array index ∪ the delta's arrays (one tokenization feeds
+    // both the signatures and the verify)
+    val dArr = graft.Engine.cut(Dedup.shingleArrays(dSurv))
+    val dBands = Dedup.sigBandsFromArrays(dArr)
     val cands = Dedup.crossCandidates(spark.read.parquet(s"$root/bands"),
         dBands, deltaDocs * Dedup.Bands)
       .unionAll(Dedup.lshCandidates(dBands)) // disjoint pair spaces
-    val newPairs = Dedup.verifyCandidatesIndexed(
-      spark.read.parquet(s"$root/sh3").unionByName(Dedup.shingles(dSurv)),
-      cands, 0.8, materializePruned = true)
+    val newPairs = Dedup.verifyCandidatesArrays(
+      spark.read.parquet(s"$root/sh3").unionByName(dArr), cands, 0.8)
     val comps = Dedup.dupComponents(
       spark.read.parquet(s"$root/pairs").unionAll(newPairs))
     val dupIds = graft.Engine.cut(
@@ -872,6 +873,7 @@ object Pipeline {
         sum(when(col("state") === "kept", col("wp_tokens")).otherwise(0L))
           .as("kept_tokens")))
     graft.Engine.free(dupIds)
+    graft.Engine.free(dArr)
     graft.Engine.free(dSurv)
     graft.Engine.free(dG)
     graft.Engine.free(dClean)

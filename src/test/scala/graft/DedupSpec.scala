@@ -193,6 +193,22 @@ class DedupSpec extends SparkSuiteBase {
     }
   }
 
+  test("dup components: the labels broadcast gate gives the same labels on both branches") {
+    import spark.implicits._
+    val pairs = ((1L until 40L).map(i => (i, i + 1)) ++
+      Seq((100L, 101L), (101L, 102L), (200L, 201L))).toDF("da", "db")
+    def labels() = Dedup.dupComponents(pairs).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val open = labels()
+    spark.conf.set(key, "-1")
+    val shut = try labels() finally spark.conf.set(key, prev)
+    assert(open === shut)
+    assert(open.values.toSet === Set(1L, 100L, 200L))
+    assert(open.size === 45)
+  }
+
   test("dup components run ONE Spark job per propagation iteration") {
     import spark.implicits._
     // chain 1..6: min-label needs 5 propagation rounds + 1 no-change
@@ -360,17 +376,34 @@ class DedupSpec extends SparkSuiteBase {
       assert(l.contains("GreaterThanOrEqual(doc_id"),
         s"full-corpus documents scan in append probe:\n$l")
     }
-    // the persisted shingle index is scanned and pruned to candidate
-    // docs via a broadcast left-semi join. (Identify the scan by the
-    // staging-root PREFIX + its column list, not the "/shingles" path
-    // suffix: FileScan Location strings truncate at 100 chars and the
-    // pid-bearing tmp root can push the suffix past the cut.)
+    // the persisted shingle-array index is scanned and pruned to
+    // candidate docs via a join against the broadcast candidate side.
+    // (Identify the scan by the staging-root PREFIX + its column list,
+    // not the "/sharr" path suffix: FileScan Location strings truncate
+    // at 100 chars and the pid-bearing tmp root can push the suffix
+    // past the cut.)
     val idxScans = plan.linesIterator.filter(l =>
       l.contains("FileScan parquet") && l.contains("graft-bandidx-")).toSeq
-    assert(idxScans.exists(_.contains("shingle#")),
-      s"persisted shingle index not scanned:\n${plan.take(2000)}")
-    assert(plan.contains("LeftSemi"),
-      s"no candidate-id semi-join pruning the shingle index:\n${plan.take(2000)}")
+    assert(idxScans.exists(_.contains("sharr#")),
+      s"persisted shingle-array index not scanned:\n${plan.take(2000)}")
+    // structurally: the index scan is the STREAMED side of a broadcast
+    // hash join (the candidates are the build side), never shuffled
+    import org.apache.spark.sql.catalyst.optimizer.BuildRight
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val phys = Dedup.appendProbe(spark, sf).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.inputPlan
+      case p => p
+    }
+    val probed = phys.collect { case j: BroadcastHashJoinExec =>
+      (if (j.buildSide == BuildRight) j.left else j.right).collect {
+        case f: FileSourceScanExec if f.output.exists(_.name == "sharr") &&
+          f.relation.location.rootPaths.exists(_.toString.contains("graft-bandidx-")) => f
+      }
+    }.flatten
+    assert(probed.nonEmpty,
+      s"the array index is not probed by a broadcast candidate join:\n${plan.take(2000)}")
   }
 
   test("crossCandidates: oversized-batch shuffle fallback yields the same pairs as the broadcast path") {

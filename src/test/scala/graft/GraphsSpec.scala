@@ -236,6 +236,70 @@ class GraphsSpec extends SparkSuiteBase {
     assert(got.nonEmpty && got.size < nbrs.size, "peel must remove SOME nodes and keep some")
   }
 
+  /** Round-by-round peel on the driver — the pre-monotone shape: each
+    * round recomputes degrees over the CURRENT edge set, stops at the
+    * first round that peels nothing, and drops every edge touching a
+    * peeled node. Returns (node → degree within the survivors, rounds
+    * that changed the graph). */
+  private def peelReference(edges: Seq[(Long, Long)], rounds: Int,
+      k: Int): (Map[Long, Long], Int) = {
+    var cur = edges ++ edges.map(_.swap)
+    var realized = 0
+    var done = false
+    for (r <- 1 to rounds if !done) {
+      val deg = cur.groupBy(_._1).view.mapValues(_.size.toLong).toMap
+      if (deg.values.forall(_ >= k)) done = true
+      else {
+        realized = r
+        val keep = deg.filter(_._2 >= k).keySet
+        cur = cur.filter(e => keep(e._1) && keep(e._2))
+      }
+    }
+    (cur.groupBy(_._1).view.mapValues(_.size.toLong).toMap, realized)
+  }
+
+  /** kcore's rows and realized rounds with the survivors' broadcast
+    * gate open (session default) and shut (threshold -1: the
+    * shuffle_hash branch). */
+  private def kcoreBothBranches(edges: Seq[(Long, Long)], rounds: Int,
+      k: Int): Seq[(Map[Long, Long], Int)] = {
+    import spark.implicits._
+    def run(): (Map[Long, Long], Int) = {
+      val got = Graphs.kcore(edges.toDF("u", "v"), rounds, k)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      (got, Graphs.lastKcoreRounds)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    val open = run()
+    spark.conf.set(key, "-1")
+    try {
+      assert(!Engine.broadcastFits(spark, 1L, 8L))
+      Seq(open, run())
+    } finally spark.conf.set(key, prev)
+  }
+
+  test("kcore monotone peel ≡ round-by-round reference on both gate branches: fixpoint, 4 realized rounds, empty, k above every degree") {
+    val clique = for { u <- 1L to 5L; v <- (u + 1) to 5L } yield (u, v)
+    // a path 1..12 into a triangle: at k=2 each round peels one path
+    // end, so all 4 rounds change the graph and the result still holds
+    // degree-1 nodes (the degrees of the round-4 survivors)
+    val path = (1L until 12L).map(i => (i, i + 1)) ++
+      Seq((12L, 100L), (100L, 101L), (101L, 102L), (100L, 102L))
+    val cases = Seq(
+      ("early fixpoint", clique ++ Seq((5L, 6L), (6L, 7L), (7L, 8L), (1L, 9L)), 3),
+      ("all rounds realized", path, 2),
+      ("empty edge list", Seq.empty[(Long, Long)], 2),
+      ("k above every degree", clique, 10))
+    for ((name, edges, k) <- cases) {
+      val want = peelReference(edges, Graphs.KcoreRounds, k)
+      for (got <- kcoreBothBranches(edges, Graphs.KcoreRounds, k))
+        assert(got === want, name)
+    }
+    assert(peelReference(path, Graphs.KcoreRounds, 2)._2 === Graphs.KcoreRounds)
+    assert(peelReference(clique, Graphs.KcoreRounds, 10) === ((Map.empty, 1)))
+  }
+
   test("labelProp: two cliques with a bridge keep separate communities") {
     import spark.implicits._
     // K4 {1,2,3,4} + K4 {5,6,7,8} + bridge 4-5: density must hold each
